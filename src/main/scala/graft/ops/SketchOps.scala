@@ -169,25 +169,6 @@ object SketchOps {
         .select(col("event_type"), col("mean_r").as("ci_hi")), "event_type")
   }
 
-  /** KMV distinct-count estimate per event type, verified against the
-    * exact count (Beyer et al. SIGMOD'07 unbiased estimator
-    * (k−1)·H/U(k) over the 48-bit portable hash range H = 2^48; when
-    * the sketch never fills, its size IS the exact distinct count).
-    *
-    * Scale shape: one groupBy over event_type where BOTH aggregates
-    * partial-aggregate map-side — the exact count via count-distinct's
-    * two-phase expansion, the sketch via
-    * [[graft.functions.SketchAggregators.kmv]]'s ≤k-element
-    * mergeable buffer. At 100 TB the exact twin is the expensive half
-    * (it shuffles every distinct key); a production pipeline keeps
-    * only the sketch column, whose shuffle volume is k·8 bytes per
-    * (task × group) regardless of input rows. The estimate itself is
-    * pure Long arithmetic ((k−1)·2^48 via 63·2^48 < 2^63, then
-    * integer div), so the oracle reproduces it exactly.
-    *
-    * Estimator variance is ~1/√(k−2) ≈ 13% at k=64 — `rel_err` in the
-    * output lets the oracle pin the achieved error, and the spec
-    * asserts the theoretical bound on random inputs. */
   /** Type-1 (no-interpolation) quantile rank: the 1-based index of the
     * p-th percentile in an n-row sorted list, ceil(n·p/100) computed in
     * exact integer arithmetic ((n·p + 99) div 100 — double mult stays
@@ -517,6 +498,25 @@ object SketchOps {
         col("n_kmv"))
   }
 
+  /** KMV distinct-count estimate per event type, verified against the
+    * exact count (Beyer et al. SIGMOD'07 unbiased estimator
+    * (k−1)·H/U(k) over the 48-bit portable hash range H = 2^48; when
+    * the sketch never fills, its size IS the exact distinct count).
+    *
+    * Scale shape: one groupBy over event_type where BOTH aggregates
+    * partial-aggregate map-side — the exact count via count-distinct's
+    * two-phase expansion, the sketch via
+    * [[graft.functions.SketchAggregators.kmv]]'s ≤k-element
+    * mergeable buffer. At 100 TB the exact twin is the expensive half
+    * (it shuffles every distinct key); a production pipeline keeps
+    * only the sketch column, whose shuffle volume is k·8 bytes per
+    * (task × group) regardless of input rows. The estimate itself is
+    * pure Long arithmetic ((k−1)·2^48 via 63·2^48 < 2^63, then
+    * integer div), so the oracle reproduces it exactly.
+    *
+    * Estimator variance is ~1/√(k−2) ≈ 13% at k=64 — `rel_err` in the
+    * output lets the oracle pin the achieved error, and the spec
+    * asserts the theoretical bound on random inputs. */
   def kmvDistinct(events: DataFrame, key: String = "user_id", k: Int = 64): DataFrame = {
     val H = 281474976710656L // 2^48, the PortableHash.hash48 range
     val h = events.select(col("event_type"), col(key),

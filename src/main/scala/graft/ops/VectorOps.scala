@@ -1158,14 +1158,6 @@ object VectorOps {
     }.toDF("c_id", "dim", "cv")
   }
 
-  /** Nearest-cells ranking per vector: broadcast the k centroids as
-    * DENSE arrays and evaluate the codegen'd [[fastL2Sq]] kernel over
-    * the map-only N×k cross join — no dim explosion, no aggregation
-    * (a single-row array fold in ascending dim order is bit-equal to
-    * the oracle's `sum((x-cv)^2 ORDER BY dim)` and deterministic by
-    * construction). The only shuffle is the per-id rank window.
-    * Output: (idCol, c_label, cdist, cell_rank). Shared by [[ivfTopK]]
-    * and [[similarityJoinIvf]]. */
   /** K-means as a first-class clustering RESULT (not just the ANN
     * quantizer it powers): per cluster, the member count and the
     * inertia (Σ squared-L2 to the centroid) of the √N-cell Lloyd
@@ -1195,6 +1187,14 @@ object VectorOps {
         roundn(col("inertia6").cast("double") / 1e6, 6).as("inertia"))
   }
 
+  /** Nearest-cells ranking per vector: broadcast the k centroids as
+    * DENSE arrays and evaluate the codegen'd [[fastL2Sq]] kernel over
+    * the map-only N×k cross join — no dim explosion, no aggregation
+    * (a single-row array fold in ascending dim order is bit-equal to
+    * the oracle's `sum((x-cv)^2 ORDER BY dim)` and deterministic by
+    * construction). The only shuffle is the per-id rank window.
+    * Output: (idCol, c_label, cdist, cell_rank). Shared by [[ivfTopK]]
+    * and [[similarityJoinIvf]]. */
   def cellRanks(df: DataFrame, cent: DataFrame, idCol: String): DataFrame = {
     // densify the exploded (c_label, dim, cv) interchange form into k
     // broadcastable rows (c_label, cvec): the per-label collect is
