@@ -58,7 +58,7 @@ object SparkEntry {
       train.write.mode("overwrite").parquet(path)
       cleanupOnExit(path)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private def knnQuery(s: SparkSession, dir: String): DataFrame = {
@@ -440,7 +440,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(tmp)
       cleanupOnExit(tmp)
       DedupOps.incrementalCandidatesFromIndex(
-        s.read.parquet(tmp), docs.filter(col("doc_id") >= 400))
+        Tables.parquet(s, tmp), docs.filter(col("doc_id") >= 400))
     }),
     // direction-aware containment C(A→B)=|A∩B|/|A| over the same LSH
     // candidates — catches subset duplication Jaccard dilutes away
@@ -1406,7 +1406,7 @@ object SparkEntry {
       cent.write.mode("overwrite").parquet(tmp)
       cleanupOnExit(tmp)
       VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe, k = 3,
-        centroids = Some(s.read.parquet(tmp)), nAssign = nAssign)
+        centroids = Some(Tables.parquet(s, tmp)), nAssign = nAssign)
     }),
     // incremental ANN ingest (the reference's index.add loop,
     // app_callapi.py:139-148): vectors with vec_id%10 >= 8 arrive as
@@ -1432,8 +1432,8 @@ object SparkEntry {
         .write.mode("overwrite").parquet(s"$tmp/assigned")
       cleanupOnExit(tmp)
       VectorOps.ivfIncrementalTopK(emb, emb.filter(col("vec_id") < 10),
-        baseAssigned = s.read.parquet(s"$tmp/assigned"),
-        cent = s.read.parquet(s"$tmp/cent"),
+        baseAssigned = Tables.parquet(s, s"$tmp/assigned"),
+        cent = Tables.parquet(s, s"$tmp/cent"),
         batch = batch, nProbe = nProbe, k = 3, nAssign = nAssign)
     }),
     // the re-Lloyd HALF of the incremental-ANN story: when drift
@@ -1485,7 +1485,7 @@ object SparkEntry {
       // bound tmp usage across runs: each run deletes its directory
       // at JVM exit (it must outlive lazy evaluation of the result)
       cleanupOnExit(tmp)
-      CorpusOps.contentHash(s.read.parquet(tmp))
+      CorpusOps.contentHash(Tables.parquet(s, tmp))
     }),
     // Multimodal plumbing (binary payload featurization). The full
     // mapPartitions featurize runs; the declared projection keeps the

@@ -600,21 +600,15 @@ object MultimodalOps {
           col("golden_id_sum"))
     }
     // the two legs are fully independent job chains (each runs its own
-    // CC contraction loop of driver-blocking rounds) — submit them from
-    // two threads so one leg's stragglers back-fill with the other
-    // leg's tasks (guide §2.6); the output union order stays fixed
-    // (image, audio) regardless of completion order
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val imageLeg = Future(leg("image",
-      imageAHash(images).toDF()
-        .select(col("media_id").as("id"), col("ahash").as("sig"), col("ok"))))
-    val audioLeg = Future(leg("audio",
-      audioFingerprint(wavs).toDF()
+    // CC contraction loop of driver-blocking rounds) — run them as
+    // parallel Legs; the output union order stays fixed (image, audio)
+    // regardless of completion order
+    val Seq(imageLeg, audioLeg) = Legs(
+      () => leg("image", imageAHash(images).toDF()
+        .select(col("media_id").as("id"), col("ahash").as("sig"), col("ok"))),
+      () => leg("audio", audioFingerprint(wavs).toDF()
         .select(col("media_id").as("id"), col("fp").as("sig"), col("ok"))))
-    Await.result(imageLeg, Duration.Inf)
-      .unionByName(Await.result(audioLeg, Duration.Inf))
+    imageLeg.unionByName(audioLeg)
   }
 
   /** One demuxed video sample (frame): presentation order index,

@@ -188,6 +188,8 @@ object PersistOps {
     events.select(col("event_id"), col("value"), col("event_type"))
       .write.mode("overwrite").partitionBy("event_type")
       .parquet(s"$tmpBase/pt")
+    // partitioned layout: spark.read.parquet discovers event_type from
+    // the directory names (Tables.parquet reads flat layouts only)
     val fact = spark.read.parquet(s"$tmpBase/pt")
     val dim = events.filter(col("value") >= frac * vmax)
       .select(col("event_type")).distinct()

@@ -251,27 +251,21 @@ object SearchOps {
                            centroids: Option[DataFrame] = None): DataFrame = {
     // the three mining legs are independent job chains over different
     // substrates (token windows / BM25 postings / embedding cells) —
-    // materialize them from three threads so their jobs overlap and
-    // stragglers back-fill (guide §2.6); EAGER checkpoints here, since
-    // each thread's job is the materialization itself. Output order
-    // and values are unchanged — the composition below reads the same
-    // three tables whichever leg finishes first.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ictF = Future(TextOps.ictPairs(docs).filter(col("doc_id") < nAnchors)
-      .select(col("doc_id").as("anchor_id"), col("q_start"))
-      .localCheckpoint(true))
-    val lexF = Future(bm25HardNegatives(docs, nQueries = nAnchors)
-      .select(col("query_doc").as("anchor_id"), col("neg_id"))
-      .localCheckpoint(true))
-    val denseF = Future(VectorOps.tripletMining(emb, centroids = centroids)
-      .filter(col("anchor_id") < nAnchors)
-      .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("margin"))
-      .localCheckpoint(true))
-    val ict = Await.result(ictF, Duration.Inf)
-    val lex = Await.result(lexF, Duration.Inf)
-    val dense = Await.result(denseF, Duration.Inf)
+    // materialize them as parallel Legs so their jobs overlap; EAGER
+    // checkpoints here, since each leg's job is the materialization
+    // itself. Output order and values are unchanged — the composition
+    // below reads the same three tables whichever leg finishes first.
+    val Seq(ict, lex, dense) = Legs(
+      () => TextOps.ictPairs(docs).filter(col("doc_id") < nAnchors)
+        .select(col("doc_id").as("anchor_id"), col("q_start"))
+        .localCheckpoint(true),
+      () => bm25HardNegatives(docs, nQueries = nAnchors)
+        .select(col("query_doc").as("anchor_id"), col("neg_id"))
+        .localCheckpoint(true),
+      () => VectorOps.tripletMining(emb, centroids = centroids)
+        .filter(col("anchor_id") < nAnchors)
+        .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("margin"))
+        .localCheckpoint(true))
     val complete = ict.select(col("anchor_id")).distinct()
       .join(lex.select(col("anchor_id")).distinct(), "anchor_id")
       .join(dense.select(col("anchor_id")).distinct(), "anchor_id")

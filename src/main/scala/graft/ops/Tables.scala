@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetBridge
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -9,6 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale the same loaders work unchanged — parquet scans are
   * partition-pruned and column-pruned by Catalyst, so ops should
   * `select` early and let pushdown reach the scan.
+  *
+  * SCHEMA FROM THE FOOTER: [[parquet]] hands the reader its schema,
+  * read by `ParquetBridge.schema` from ONE footer on the driver — the
+  * file Spark's own inference would touch (the path itself, or in a
+  * flat directory `_common_metadata`, then `_metadata`, then the
+  * first data file by path). Plain `spark.read.parquet` infers the
+  * same schema with a one-task Spark job, and on the short queries
+  * of the read path the job count sets the wall time. The converter
+  * settings (nanosAsLong, binaryAsString, int96AsTimestamp,
+  * inferTimestampNTZ) come from the session PASSED IN, which is why
+  * [[events]] reads through its configured child. The footer is read
+  * again on every call: a schema cached across calls would be a
+  * result shared across queries (the invariant below) and would go
+  * stale when a path is rewritten. Partitioned layouts keep
+  * `spark.read.parquet` (`ParquetBridge` rejects them).
   *
   * INVARIANT (Bench depends on it): no DataFrame — in particular no
   * cached or localCheckpoint'd one — is ever shared ACROSS declared
@@ -20,8 +36,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * between-query cleanup must learn to track per-query RDD ids first.
   */
 object Tables {
+  /** A parquet file or flat directory, read without a schema job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetBridge.schema(spark, path)).parquet(path)
+
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
