@@ -1,29 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private val Repeats = 3
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same timezone as Verify/PlansDump: tz-dependent queries
-      // (hour windows, date rollups) must benchmark the SAME
-      // computation that was verified, on any machine
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's only unpartitioned windows rank ≤k-row tops (PLANS
-    // documents the bound) — WindowExec's blanket single-partition
-    // warning is noise here; a constant partition key cannot silence
-    // it (EliminateWindowPartitions folds it away), so quiet the
-    // logger directly
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // same session as Verify/PlansDump: tz-dependent queries (hour
+    // windows, date rollups) benchmark the SAME computation that was
+    // verified, on any machine
+    val spark = GraftSession.local(GraftSession.cpus, "WARN")
     // warm-up: JIT + codegen + parquet footer caches, so the first
     // timed query doesn't absorb session startup cost; guarded so a
     // bad sfDir still reaches the per-query loop (which reports -1s)
@@ -51,10 +34,10 @@ object Bench {
       val m = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
       m.getUsed / (1024 * 1024)
     }
-    val gcPerQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val heapPerQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val results: Map[String, Seq[Double]] = selected.map { case (name, fn) =>
-      val gc0 = gcMillis()
+    // `Repeats` timed runs of one query; `label` prefixes its failure
+    // lines on stderr
+    def timeQuery(label: String, name: String): Seq[Double] = {
+      val fn = selected(name)
       val times = (1 to Repeats).map { _ =>
         val t0 = System.nanoTime()
         // noop sink forces FULL evaluation of every output column —
@@ -64,7 +47,7 @@ object Bench {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch {
             case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+              System.err.println(s"[bench] $label$name FAILED: ${e.getMessage}")
               false
           }
         // a failed query reports -1, never a flattering near-zero time
@@ -79,6 +62,13 @@ object Bench {
       // reuse exists, so unpersisting between entries is safe.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+      times
+    }
+    val gcPerQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val heapPerQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val results: Map[String, Seq[Double]] = selected.map { case (name, _) =>
+      val gc0 = gcMillis()
+      val times = timeQuery("", name)
       gcPerQuery(name) = gcMillis() - gc0
       heapPerQuery(name) = heapMb()
       name -> times
@@ -130,23 +120,7 @@ object Bench {
     // for a flaking query (r14 ADVICE).
     val retimeSet = succeeded.sortBy { case (_, m) => -m }.take(16)
     val retimed: Seq[(String, Double)] =
-      retimeSet.map { case (name, _) =>
-        val fn = selected(name)
-        val times = (1 to Repeats).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] retime $name FAILED: ${e.getMessage}")
-                false
-            }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        name -> median(times)
-      }
+      retimeSet.map { case (name, _) => name -> median(timeQuery("retime ", name)) }
     // the adjudicated headline (r14 verdict #7, convention fixed per
     // r15 verdict #7): the suite total with each retimed query's
     // in-suite median replaced by min(in-suite median, solo retime).

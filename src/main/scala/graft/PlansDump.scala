@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md — formatted physical plans for EVERY query in
@@ -30,14 +29,8 @@ object PlansDump {
     "events_funnel", "orc_roundtrip", "bpe_vocab_size", "media_metadata")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores, so PLANS.md does not depend on the host
+    val spark = GraftSession.local("4", "ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     // headline curation first (reviewer reading order), then every
     // remaining declared query alphabetically — the dump covers the

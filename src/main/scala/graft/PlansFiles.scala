@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for a comma-separated list of queries
@@ -12,14 +11,8 @@ object PlansFiles {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlansFiles <outDir> <suffix> <names>")
     val (outDir, suffix, names) = (args(0), args(1), args(2).split(',').toSeq)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores, so the plans do not depend on the host
+    val spark = GraftSession.local("4", "ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

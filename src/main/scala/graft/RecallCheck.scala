@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Tables, VectorOps}
 
@@ -18,12 +17,7 @@ import graft.ops.{Tables, VectorOps}
 object RecallCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-recall")
-      .master(sys.env.get("SPARK_GRAFT_CPUS").map(c => s"local[$c]").getOrElse("local[8]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus, "WARN")
     try {
       val emb = Tables.embeddings(spark, dir)
       val queries = emb.filter(col("vec_id") < 10)

@@ -115,13 +115,9 @@ object CorpusOps {
     * representative — carried as two columns, not an arithmetic key
     * (doc_id·K + para_idx collides once para_idx ≥ K). */
   def dedupParagraphs(docs: DataFrame, delim: String = " "): DataFrame = {
-    val byPara = Window.partitionBy(col("para"))
-    segmentParagraphs(docs, delim)
-      .withColumn("n_copies", count(lit(1)).over(byPara))
-      .withColumn(
-        "rn",
-        row_number().over(byPara.orderBy(col("doc_id"), col("para_idx"))))
-      .filter(col("rn") === 1)
+    val copies = segmentParagraphs(docs, delim)
+      .withColumn("n_copies", count(lit(1)).over(Window.partitionBy(col("para"))))
+    Rank.top(copies, Seq(col("para")), Seq(col("doc_id"), col("para_idx")), lit(1))
       .select(
         col("para"), col("n_copies"),
         col("doc_id").as("first_doc_id"),
@@ -204,11 +200,8 @@ object CorpusOps {
     * is exchange-free on the base side — the Delta/Iceberg MERGE
     * cost model. */
   def cdcApply(base: DataFrame, changes: DataFrame): DataFrame = {
-    val latest = changes
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("version").desc, col("op"))))
-      .filter(col("rn") === 1)
+    val latest = Rank.top(changes, Seq(col("doc_id")),
+        Seq(col("version").desc, col("op")), lit(1))
       .select(col("doc_id"), col("op"), col("text").as("new_text"))
     base.select(col("doc_id"), col("text"))
       .join(latest, Seq("doc_id"), "full_outer")
@@ -259,10 +252,7 @@ object CorpusOps {
                      dim: Int = 64): DataFrame = {
     val changed = incrementalAntiJoin(filterSources(docs), state)
     val paras = chunkParagraphs(changed, window)
-    val firsts = paras
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("para")).orderBy(col("doc_id"), col("para_idx"))))
-      .filter(col("rn") === 1)
+    val firsts = Rank.top(paras, Seq(col("para")), Seq(col("doc_id"), col("para_idx")), lit(1))
     val keyed = firsts.select(
       (col("doc_id") * 1000 + col("para_idx")).as("doc_id"),
       col("para").as("text"))

@@ -203,9 +203,6 @@ object DedupOps {
   /** Distinct-shingle count per doc — doubles as the "has a MinHash
     * signature at all" eligibility gate (a doc below w tokens has no
     * shingles, hence no signature, no buckets, no pairs). */
-  private def shingleCounts(docs: DataFrame, w: Int): DataFrame =
-    shingleCountsFromShingles(distinctShingles(docs, w))
-
   private def shingleCountsFromShingles(sh: DataFrame): DataFrame =
     sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
 
@@ -1377,13 +1374,11 @@ object DedupOps {
     var lab = und.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     for (_ <- 1 to iters) {
-      lab = und
+      val votes = und
         .join(lab.select(col("id").as("src"), col("label")), "src")
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("n"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("dst")).orderBy(col("n").desc, col("label"))))
-        .filter(col("rn") === 1)
+      lab = Rank.top(votes, Seq(col("dst")), Seq(col("n").desc, col("label")), lit(1))
         .select(col("dst").as("id"), col("label"))
     }
     lab.select(col("id").as("doc_id"), col("label").as("community"))
@@ -1855,10 +1850,8 @@ object DedupOps {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .join(broadcast(clusters), "doc_id")
       .localCheckpoint(false)
-    val wCanon = Window.partitionBy(col("cluster_id"))
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    val canon = membered.withColumn("rn", row_number().over(wCanon))
-      .filter(col("rn") === 1)
+    val canon = Rank.top(membered, Seq(col("cluster_id")),
+        Seq(col("n_chars").desc, col("doc_id")), lit(1))
       .select(col("cluster_id"), col("doc_id").as("canonical_doc"),
         col("n_chars").as("canonical_chars"),
         col("source").as("canonical_source"))

@@ -50,12 +50,8 @@ object KeywordOps {
       .filter(keepKeyword(col("tok")))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos"))
-    val w = Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("tf").desc, length(col("tok")).desc, col("tok"), col("first_pos"))
-    toks
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= n)
+    Rank.top(toks, Seq(col("doc_id")),
+        Seq(col("tf").desc, length(col("tok")).desc, col("tok"), col("first_pos")), lit(n))
       .select(col("doc_id"), col("rank"), col("tok").as("keyword"), col("tf"))
   }
 
@@ -127,12 +123,8 @@ object KeywordOps {
     // Rank on INTEGER keys only (tf desc ≈ score desc for fixed df;
     // df asc for fixed tf): a 1-ulp libm ln() difference between
     // engines must not be able to flip the top-n set.
-    val w = Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("tf").desc, col("df"), col("gram"), col("first_pos"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= n)
+    Rank.top(scored, Seq(col("doc_id")),
+        Seq(col("tf").desc, col("df"), col("gram"), col("first_pos")), lit(n))
       .select(col("doc_id"), col("rank"), col("gram").as("keyword"), col("score"))
   }
 }

@@ -390,12 +390,10 @@ object RelationalOps {
     val bounds = pairs.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
     val split = pairs.crossJoin(broadcast(bounds))
       .withColumn("is_train", col("day") < expr("(dmin + dmax + 1) div 2"))
-    val model = split.filter(col("is_train"))
+    val transitions = split.filter(col("is_train"))
       .groupBy(col("from_type"), col("to_type")).agg(count(lit(1)).as("c"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("from_type"))
-          .orderBy(col("c").desc, col("to_type"))))
-      .filter(col("rn") === 1)
+    val model = Rank.top(transitions, Seq(col("from_type")),
+        Seq(col("c").desc, col("to_type")), lit(1))
       .select(col("from_type"), col("to_type").as("predicted_next"))
     split.filter(!col("is_train"))
       .join(broadcast(model), Seq("from_type"), "left")
@@ -468,22 +466,7 @@ object RelationalOps {
     * types), the band agg is 4 rows. No windows over unbounded sets
     * (the argmax window partitions by user — bounded by |types|). */
   def kAnonymity(events: DataFrame): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val wTop = Window.partitionBy(col("user_id"))
-      .orderBy(col("n_t").desc, col("event_type"))
-    val topType = events.groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_t"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("top_type"))
-    val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
-      .select(col("user_id"),
-        least(lit(10L), expr("n_ev div 10")).as("activity_bucket"),
-        least(lit(10L), expr("n_days div 3")).as("days_bucket"))
-    val classes = profile.join(topType, "user_id")
+    val classes = quasiProfile(events)
       .groupBy(col("activity_bucket"), col("top_type"), col("days_bucket"))
       .agg(count(lit(1)).as("k"))
     classes
@@ -492,6 +475,27 @@ object RelationalOps {
           .when(col("k") <= 19, "5-19").otherwise("20+"))
       .groupBy(col("k_band"))
       .agg(count(lit(1)).as("n_classes"), sum(col("k")).as("n_users"))
+  }
+
+  /** The quasi-identifier profile the three privacy audits share, one
+    * row per user: (user_id, activity_bucket, days_bucket, top_type) —
+    * event count and active days floor-divided into ≤ 11 buckets each,
+    * and the dominant event type (count desc, type asc). */
+  private def quasiProfile(events: DataFrame): DataFrame = {
+    val dayNanos = 86400L * 1000 * 1000 * 1000
+    val typeCounts = events.groupBy(col("user_id"), col("event_type"))
+      .agg(count(lit(1)).as("n_t"))
+    val topType = Rank.top(typeCounts, Seq(col("user_id")),
+        Seq(col("n_t").desc, col("event_type")), lit(1))
+      .select(col("user_id"), col("event_type").as("top_type"))
+    events
+      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
+      .select(col("user_id"),
+        least(lit(10L), expr("n_ev div 10")).as("activity_bucket"),
+        least(lit(10L), expr("n_days div 3")).as("days_bucket"))
+      .join(topType, "user_id")
   }
 
   /** l-diversity audit — [[kAnonymity]]'s companion (Machanavajjhala
@@ -506,28 +510,12 @@ object RelationalOps {
     * Scale shape: two user-keyed aggs sharing the events scan shape
     * kAnonymity uses, then a bounded-key (≤ 11·11) class agg —
     * nothing wider than the per-user reduction. */
-  def lDiversity(events: DataFrame, lMin: Long = 3): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val wTop = Window.partitionBy(col("user_id"))
-      .orderBy(col("n_t").desc, col("event_type"))
-    val topType = events.groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_t"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("top_type"))
-    val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
-      .select(col("user_id"),
-        least(lit(10L), expr("n_ev div 10")).as("activity_bucket"),
-        least(lit(10L), expr("n_days div 3")).as("days_bucket"))
-    profile.join(topType, "user_id")
+  def lDiversity(events: DataFrame, lMin: Long = 3): DataFrame =
+    quasiProfile(events)
       .groupBy(col("activity_bucket"), col("days_bucket"))
       .agg(count(lit(1)).as("k"),
         countDistinct(col("top_type")).as("l_distinct"))
       .withColumn("diverse_ok", col("l_distinct") >= lMin)
-  }
 
   /** Differentially-private count release, the mechanism made
     * REPLAYABLE — [[kAnonymity]]'s sibling in the governance family
@@ -1231,11 +1219,7 @@ object RelationalOps {
     val cusum = daily.join(broadcast(period), "event_type")
       .withColumn("cusum", sum(col("m") - col("mm")).over(w))
       .withColumn("abs_cusum", roundn(abs(col("cusum")), 6))
-    cusum
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(col("abs_cusum").desc, col("day"))))
-      .filter(col("rn") === 1)
+    Rank.top(cusum, Seq(col("event_type")), Seq(col("abs_cusum").desc, col("day")), lit(1))
       .select(col("event_type"), col("n_days"), col("day").as("cp_day"),
         col("abs_cusum").as("max_abs_cusum"))
   }
@@ -2500,22 +2484,7 @@ object RelationalOps {
     * ≤(11·11·|types|) class×type spine, bounded regardless of corpus
     * size. */
   def tCloseness(events: DataFrame, tMaxMicro: Long = 250000L): DataFrame = {
-    val dayNanos = 86400L * 1000 * 1000 * 1000
-    val wTop = Window.partitionBy(col("user_id"))
-      .orderBy(col("n_t").desc, col("event_type"))
-    val topType = events.groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_t"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("top_type"))
-    val profile = events
-      .select(col("user_id"), expr(s"ts div ${dayNanos}L").as("day"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"), countDistinct(col("day")).as("n_days"))
-      .select(col("user_id"),
-        least(lit(10L), expr("n_ev div 10")).as("activity_bucket"),
-        least(lit(10L), expr("n_days div 3")).as("days_bucket"))
-    val users = profile.join(topType, "user_id")
+    val users = quasiProfile(events)
       .select(col("activity_bucket"), col("days_bucket"), col("top_type"))
       .localCheckpoint(false)
     val global = users.groupBy(col("top_type")).agg(count(lit(1)).as("g"))

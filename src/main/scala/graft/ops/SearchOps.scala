@@ -216,11 +216,7 @@ object SearchOps {
       .groupBy(col("query_doc"), col("doc_id"))
       .agg(roundn(graft.functions.VectorMath.orderedSum(
         col("tok"), col("contrib")), 6).as("score"))
-    val w = Window.partitionBy(col("query_doc"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_doc")), Seq(col("score").desc, col("doc_id")), lit(k))
       .select(col("query_doc"), col("rank"), col("doc_id").as("neg_id"), col("score"))
   }
 
@@ -501,11 +497,10 @@ object SearchOps {
         when(array_contains(qlit, col("t1")), col("t1")).otherwise(col("t2")).as("q"),
         when(array_contains(qlit, col("t1")), col("t2")).otherwise(col("t1")).as("partner"))
       .filter(!array_contains(qlit, col("partner")))
-    val expansions = touching
+    val coCounts = touching
       .groupBy(col("q"), col("partner")).agg(count(lit(1)).as("n_co"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q")).orderBy(col("n_co").desc, col("partner"))))
-      .filter(col("rn") <= mExpand)
+    val expansions = Rank.top(coCounts, Seq(col("q")),
+        Seq(col("n_co").desc, col("partner")), lit(mExpand))
       .select(col("partner").as("tok"), lit(0.5).as("w"))
       .distinct()
     val terms = qTerms.toDF("tok").withColumn("w", lit(1.0))
@@ -693,10 +688,8 @@ object SearchOps {
           col("b.seq") < col("a.seq") + window)
       .groupBy(col("a.doc_id").as("doc_id"), col("a.seq").as("win_start"))
       .agg(count(lit(1)).as("n_hits"))
-    val best = wins.withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("n_hits").desc, col("win_start"))))
-      .filter(col("rn") === 1).drop("rn")
+    val best = Rank.top(wins, Seq(col("doc_id")), Seq(col("n_hits").desc, col("win_start")),
+      lit(1)).drop("rank")
     val top = best.orderBy(col("n_hits").desc, col("doc_id")).limit(k)
     seqd.join(broadcast(top), Seq("doc_id"))
       .filter(col("seq") >= col("win_start") &&

@@ -402,11 +402,8 @@ object TextOps {
       .agg(sum(col("tf") * coalesce(col("w_mu"), col("d_mu"))).as("s"))
       .join(broadcast(priors), "lang")
       .select(col("doc_id"), col("lang"), (col("s") + col("prior_mu")).as("score_micro"))
-    val best = scores
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("score_micro").desc, col("lang"))))
-      .filter(col("rn") === 1)
+    val best = Rank.top(scores, Seq(col("doc_id")), Seq(col("score_micro").desc, col("lang")),
+        lit(1))
       .select(col("doc_id"), col("lang").as("p_lang"), col("score_micro").as("p_score"))
     // docs below 3 chars have no features: fall back to the prior
     // argmax (ties on lang asc) — the Bayes answer for "no evidence"
@@ -596,12 +593,10 @@ object TextOps {
     * O(partitions·n) rows per group, not the group's full data
     * (asserted in PlanSpec). */
   def groupSample(docs: DataFrame, n: Int = 20): DataFrame = {
-    val w = Window.partitionBy(col("lang")).orderBy(col("sample_key"), col("doc_id"))
-    docs
-      .withColumn("sample_key", graft.functions.PortableHash.hash24(
-        concat(col("text"), lit("|gsample"))))
-      .withColumn("sample_rank", row_number().over(w).cast("long"))
-      .filter(col("sample_rank") <= n)
+    val keyed = docs.withColumn("sample_key", graft.functions.PortableHash.hash24(
+      concat(col("text"), lit("|gsample"))))
+    Rank.top(keyed, Seq(col("lang")), Seq(col("sample_key"), col("doc_id")), lit(n),
+        "sample_rank")
       .select(col("doc_id"), col("lang"), col("sample_key"), col("sample_rank"))
   }
 
@@ -1389,10 +1384,8 @@ object TextOps {
       .filter(col("cum") >= col("k") && col("cum") - col("cnt") < col("k"))
       .select(col("iw").as("t"), (col("k") - (col("cum") - col("cnt"))).as("keep_at_t"))
     val above = w.crossJoin(broadcast(thr)).filter(col("iw") > col("t"))
-    val atT = w.crossJoin(broadcast(thr)).filter(col("iw") === col("t"))
-      .withColumn("tie_rank", row_number().over(
-        Window.partitionBy(col("t")).orderBy(col("doc_id"))))
-      .filter(col("tie_rank") <= col("keep_at_t"))
+    val atT = Rank.top(w.crossJoin(broadcast(thr)).filter(col("iw") === col("t")),
+      Seq(col("t")), Seq(col("doc_id")), col("keep_at_t"))
     above.select(col("doc_id"), col("n_tok"), col("dsir_weight"))
       .unionByName(atT.select(col("doc_id"), col("n_tok"), col("dsir_weight")))
   }
@@ -1676,10 +1669,8 @@ object TextOps {
       .filter(col("cum") >= col("k") && col("cum") - col("cnt") < col("k"))
       .select(col("iw").as("t"), (col("k") - (col("cum") - col("cnt"))).as("keep_at_t"))
     val above = w.crossJoin(broadcast(thr)).filter(col("iw") > col("t"))
-    val atT = w.crossJoin(broadcast(thr)).filter(col("iw") === col("t"))
-      .withColumn("tie_rank", row_number().over(
-        Window.partitionBy(col("t")).orderBy(col("doc_id"))))
-      .filter(col("tie_rank") <= col("keep_at_t"))
+    val atT = Rank.top(w.crossJoin(broadcast(thr)).filter(col("iw") === col("t")),
+      Seq(col("t")), Seq(col("doc_id")), col("keep_at_t"))
     above.select(col("doc_id"), col("lp_uni"), col("lp_bi"), col("rho"))
       .unionByName(atT.select(col("doc_id"), col("lp_uni"), col("lp_bi"), col("rho")))
   }
@@ -3145,10 +3136,7 @@ object TextOps {
       .withColumn("sse_scaled",
         (col("n") * col("syy") - col("sy") * col("sy")).cast("double") -
           col("a_raw") * (col("n") * col("sxy") - col("sx") * col("sy")).cast("double"))
-    val best = moments
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("sse_scaled"), col("alpha100"))))
-      .filter(col("rk") === 1)
+    val best = Rank.top(moments, Nil, Seq(col("sse_scaled"), col("alpha100")), lit(1))
       .select(
         roundn(col("alpha100") / lit(100.0), 6).as("alpha_hat"),
         roundn((col("sy").cast("double") / 1e6 -

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
 
@@ -109,11 +108,7 @@ object TopicOps {
           col(s"u$z").cast("decimal(38,0)").as("u")))
       .reduce(_ unionByName _)
     val nzFin = long.groupBy(col("topic")).agg(sum(col("u")).as("nu"))
-    long
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("topic"))
-          .orderBy(col("u").desc, col("tok"))).cast("long"))
-      .filter(col("rank") <= topN)
+    Rank.top(long, Seq(col("topic")), Seq(col("u").desc, col("tok")), lit(topN))
       .join(broadcast(nzFin), "topic")
       .select(col("topic"), col("rank"), col("tok"),
         graft.functions.VectorMath.roundn(
@@ -153,13 +148,10 @@ object TopicOps {
       .select(col("topic"), col("tok"),
         micro(log((col("u").cast("double") + 1.0) /
           (col("nu").cast("double") + col("v").cast("double")))).as("w_mu"))
-    tf.join(w, "tok")
+    val scores = tf.join(w, "tok")
       .groupBy(col("doc_id"), col("topic"))
       .agg(sum(col("tf") * col("w_mu")).as("score_micro"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id"))
-          .orderBy(col("score_micro").desc, col("topic"))))
-      .filter(col("rn") === 1)
+    Rank.top(scores, Seq(col("doc_id")), Seq(col("score_micro").desc, col("topic")), lit(1))
       .select(col("doc_id"), col("topic"), col("score_micro"))
   }
 

@@ -215,14 +215,11 @@ object VectorOps {
       .join(lab.select(col("vec_id").as("neg_id"), col("label").as("neg_label")), "neg_id")
       .filter(col("anchor_label") =!= col("neg_label"))
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos_sim").desc, col("neg_id"))
-    cand
+    val scored = cand
       .join(e.select(col("vec_id").as("anchor_id"), col("e").as("ea")), "anchor_id")
       .join(e.select(col("vec_id").as("neg_id"), col("e").as("eb")), "neg_id")
       .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    Rank.top(scored, Seq(col("anchor_id")), Seq(col("cos_sim").desc, col("neg_id")), lit(1))
       .select(col("anchor_id"), col("anchor_label"), col("neg_id"),
         col("neg_label"), col("cos_sim"))
   }
@@ -267,14 +264,11 @@ object VectorOps {
       .select(col("anchor_id"), col("anchor_label"), col("other_id"),
         col("other_label"), col("cos_sim"))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos_sim").desc, col("other_id"))
     def top(same: Boolean, idName: String, cosName: String): DataFrame =
-      scored
-        .filter(if (same) col("other_label") === col("anchor_label")
-                else col("other_label") =!= col("anchor_label"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      Rank.top(
+        scored.filter(if (same) col("other_label") === col("anchor_label")
+                      else col("other_label") =!= col("anchor_label")),
+        Seq(col("anchor_id")), Seq(col("cos_sim").desc, col("other_id")), lit(1))
         .select(col("anchor_id"), col("anchor_label"),
           col("other_id").as(idName), col("cos_sim").as(cosName))
     top(same = true, "pos_id", "cos_pos")
@@ -311,15 +305,12 @@ object VectorOps {
         .select(col("id").as("bench_id"), col("c_label")), "c_label")
       .select(col("corpus_id"), col("bench_id")).distinct()
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    cand
+    val scored = cand
       .join(e.select(col("vec_id").as("corpus_id"), col("e").as("ec")), "corpus_id")
       .join(broadcast(e.filter(col("vec_id") < nBench)
         .select(col("vec_id").as("bench_id"), col("e").as("eb"))), "bench_id")
       .withColumn("cos_sim", roundn(fastCosine(col("ec"), col("eb")), 6))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("corpus_id"))
-          .orderBy(col("cos_sim").desc, col("bench_id"))))
-      .filter(col("rn") === 1)
+    Rank.top(scored, Seq(col("corpus_id")), Seq(col("cos_sim").desc, col("bench_id")), lit(1))
       .select(col("corpus_id"), col("bench_id"), col("cos_sim"),
         (col("cos_sim") >= tau).as("contaminated"))
   }
@@ -412,12 +403,10 @@ object VectorOps {
   def annTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    c.crossJoin(broadcast(q))
+    val scored = c.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
 
@@ -444,15 +433,10 @@ object VectorOps {
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
     val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = codes.crossJoin(broadcast(qcodes))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
   /** The full production ANN funnel — IVF × scalar quantization
@@ -484,15 +468,11 @@ object VectorOps {
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
     val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = candidates
       .join(codes, "vec_id")
       .join(broadcast(qcodes), "query_id")
       .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
   /** Product quantization top-k (ADC form, Jégou et al. TPAMI'11) —
@@ -528,44 +508,13 @@ object VectorOps {
     require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
     requireDenseSeedIds(corpus, ksub, "pqTopK")
     val dsub = d / m
-
-    // map-side subvector view: (id, s, sv[dsub]) — slice, never a shuffle
-    def subvecs(df: DataFrame, idCol: String): DataFrame = df
-      .select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e"))
-      .withColumn("s", explode(sequence(lit(0L), lit(m - 1L))))
-      .select(col(idCol), col("s"),
-        slice(col("e"), (col("s") * dsub + 1).cast("int"), lit(dsub)).as("sv"))
-
-    // densify exploded (s, code, ld, cv) codebooks to broadcastable
-    // (s, code, cvec) rows — per-group collect bounded by dsub
-    def dense(centExpl: DataFrame): DataFrame = centExpl
-      .groupBy(col("s"), col("code"))
-      .agg(transform(array_sort(collect_list(struct(col("ld"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-
-    // nearest-code argmin per (id, subspace): rounded distance, code
-    // tie-break, evaluated as a partial-aggregated min_by over the
-    // codegen'd dense-array kernel (no window over the N·m·ksub rows)
-    def assign(sv: DataFrame, idCol: String, centDense: DataFrame): DataFrame = sv
-      .join(broadcast(centDense), "s")
-      .withColumn("dist", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
-      .groupBy(col(idCol), col("s"))
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+    def subvecs(df: DataFrame, idCol: String): DataFrame = pqSubvecs(
+      df.select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e")),
+      Seq(idCol), "e", m, dsub)
 
     val csv = subvecs(corpus, "vec_id")
-    // seeds: the first ksub vectors' subvectors, rounded like the oracle
-    var cent = subvecs(corpus.filter(col("vec_id") < ksub), "code")
-      .select(col("s"), col("code"), transform(col("sv"), x => roundn(x, 6)).as("cvec"))
-    for (_ <- 1 to iters) {
-      val a = assign(csv, "vec_id", cent)
-      cent = dense(
-        csv.join(a, Seq("vec_id", "s"))
-          .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
-          .groupBy(col("s"), col("code"), col("ld"))
-          .agg(roundn(avg(col("x")), 6).as("cv")))
-    }
-
-    val codes = assign(csv, "vec_id", cent)
+    val cent = pqTrain(csv, subvecs(corpus.filter(col("vec_id") < ksub), "code"), iters)
+    val codes = pqAssign(csv, "vec_id", cent)
     val codesArr = codes.groupBy(col("vec_id"))
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("carr"))
@@ -576,7 +525,6 @@ object VectorOps {
       .groupBy(col("query_id"))
       .agg(map_from_entries(collect_list(
         struct((col("s") * ksub + col("code")).as("idx"), col("pd")))).as("lut"))
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = codesArr.crossJoin(broadcast(lut))
       .filter(col("vec_id") =!= col("query_id"))
       // ADC: fold the m table lookups in subspace order — map-side,
@@ -584,10 +532,7 @@ object VectorOps {
       .withColumn("qdist", roundn(aggregate(
         sequence(lit(0L), lit(m - 1L)), lit(0.0),
         (acc, s) => acc + element_at(col("lut"), s * ksub + element_at(col("carr"), (s + 1).cast("int")))), 6))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
 
@@ -667,25 +612,14 @@ object VectorOps {
     // encode (~5 reads of the res→cellRanks chain otherwise) —
     // materialize it ONCE; at 100 TB this is the standard
     // train-on-a-materialized-sample step (pqTopK scaladoc)
-    val csv = ivfPqSubvecs(res, Seq("vec_id"), "r", m, dsub)
+    val csv = pqSubvecs(res, Seq("vec_id"), "r", m, dsub)
       .localCheckpoint(false)
-    var pqc = ivfPqSubvecs(res.filter(col("vec_id") < ksub)
-        .withColumnRenamed("vec_id", "code"), Seq("code"), "r", m, dsub)
-      .select(col("s"), col("code"), transform(col("sv"), x => roundn(x, 6)).as("cvec"))
-    for (_ <- 1 to iters) {
-      val a = ivfPqAssign(csv, "vec_id", pqc)
-      pqc = csv.join(a, Seq("vec_id", "s"))
-        .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
-        .groupBy(col("s"), col("code"), col("ld"))
-        .agg(roundn(avg(col("x")), 6).as("cv"))
-        .groupBy(col("s"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("ld"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-    }
+    val seeds = pqSubvecs(res.filter(col("vec_id") < ksub)
+      .withColumnRenamed("vec_id", "code"), Seq("code"), "r", m, dsub)
     // the trained codebook heads the encode here and the query LUT in
     // the apply half — m·ksub rows, pin it
-    pqc = pqc.localCheckpoint(false)
-    val codes = ivfPqAssign(csv, "vec_id", pqc)
+    val pqc = pqTrain(csv, seeds, iters).localCheckpoint(false)
+    val codes = pqAssign(csv, "vec_id", pqc)
       .groupBy(col("vec_id"))
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("carr"))
@@ -709,21 +643,42 @@ object VectorOps {
         "row_number() over vec_id before training")
   }
 
-  /** Map-side subvector view shared by the IVFADC train/apply halves:
+  /** Map-side subvector view shared by every PQ train/apply half:
     * (keys..., s, sv[dsub]) — slice, never a shuffle. */
-  private def ivfPqSubvecs(df: DataFrame, keyCols: Seq[String], vecCol: String,
-                           m: Int, dsub: Int): DataFrame = df
+  private def pqSubvecs(df: DataFrame, keyCols: Seq[String], vecCol: String,
+                        m: Int, dsub: Int): DataFrame = df
     .withColumn("s", explode(sequence(lit(0L), lit(m - 1L))))
     .select(keyCols.map(col) ++ Seq(col("s"),
       slice(col(vecCol), (col("s") * dsub + 1).cast("int"), lit(dsub)).as("sv")): _*)
 
   /** Nearest-code argmin per (id, subspace): rounded distance, code
-    * tie-break, partial-aggregated min_by (the pqTopK kernel). */
-  private def ivfPqAssign(sv: DataFrame, idCol: String, centDn: DataFrame): DataFrame = sv
-    .join(broadcast(centDn), "s")
+    * tie-break, evaluated as a partial-aggregated min_by over the
+    * codegen'd dense-array kernel (no window over the N·m·ksub rows).
+    * `book` is a densified (s, code, cvec) codebook. */
+  private def pqAssign(sv: DataFrame, idCol: String, book: DataFrame): DataFrame = sv
+    .join(broadcast(book), "s")
     .withColumn("dist", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
     .groupBy(col(idCol), col("s"))
     .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+
+  /** Relational Lloyd over a (vec_id, s, sv) subvector stream: the
+    * seeds' subvectors `(code, s, sv)`, rounded like the oracle, are
+    * the first codebook; each of `iters` rounds assigns every
+    * subvector its nearest code ([[pqAssign]]) and moves each code to
+    * the rounded per-component mean of its members, densified back to
+    * broadcastable (s, code, cvec) rows (per-group collect bounded by
+    * dsub). Materializing `csv` or the result is the caller's call. */
+  private def pqTrain(csv: DataFrame, seeds: DataFrame, iters: Int): DataFrame =
+    (1 to iters).foldLeft(seeds.select(col("s"), col("code"),
+        transform(col("sv"), x => roundn(x, 6)).as("cvec"))) { (book, _) =>
+      csv.join(pqAssign(csv, "vec_id", book), Seq("vec_id", "s"))
+        .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("ld", "x")))
+        .groupBy(col("s"), col("code"), col("ld"))
+        .agg(roundn(avg(col("x")), 6).as("cv"))
+        .groupBy(col("s"), col("code"))
+        .agg(transform(array_sort(collect_list(struct(col("ld"), col("cv")))),
+          x => x.getField("cv")).as("cvec"))
+    }
 
   /** The APPLY half of the residual-IVFADC funnel against a
     * (possibly reloaded) index: per probed cell the query residual
@@ -749,7 +704,7 @@ object VectorOps {
       .join(broadcast(centDense), "c_label")
       .select(col("query_id"), col("c_label"),
         zip_with(col("qe"), col("ccvec"), (x, c) => x - c).as("r"))
-    val lut = ivfPqSubvecs(qres, Seq("query_id", "c_label"), "r", m, dsub)
+    val lut = pqSubvecs(qres, Seq("query_id", "c_label"), "r", m, dsub)
       .join(broadcast(pqCodebook), "s")
       .withColumn("pd", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
       .groupBy(col("query_id"), col("c_label"))
@@ -765,10 +720,6 @@ object VectorOps {
       .select(col("query_id"), col("vec_id"), col("qdist"))
   }
 
-  /** [[ivfPqTopK]]'s budget window + exact rerank against a
-    * precomputed (possibly persisted-and-reloaded) index — the load
-    * half of load-or-create on the PQ tier; must reproduce the
-    * in-session [[ivfPqTopK]] answer bit-for-bit (shared oracle). */
   /** PQ distortion receipt — the number a trained codebook SHIPS
     * with (Jégou TPAMI'11's quantization MSE, the standard
     * train-time diagnostic): per vector, the squared error between
@@ -800,7 +751,7 @@ object VectorOps {
       .join(broadcast(centDense), "c_label")
       .select(col("vec_id"), col("carr"),
         zip_with(col("e"), col("ccvec"), (x, c) => x - c).as("r"))
-    val pv = ivfPqSubvecs(res, Seq("vec_id", "carr"), "r", m, dsub)
+    val pv = pqSubvecs(res, Seq("vec_id", "carr"), "r", m, dsub)
       .withColumn("code", element_at(col("carr"), (col("s") + 1).cast("int")))
       .join(broadcast(pqCodebook), Seq("s", "code"))
       .withColumn("term", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
@@ -825,16 +776,16 @@ object VectorOps {
         col("p50_micro"), col("p95_micro"), col("max_micro"))
   }
 
+  /** [[ivfPqTopK]]'s budget window + exact rerank against a
+    * precomputed (possibly persisted-and-reloaded) index — the load
+    * half of load-or-create on the PQ tier; must reproduce the
+    * in-session [[ivfPqTopK]] answer bit-for-bit (shared oracle). */
   def ivfPqTopKFromIndex(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
                          cent: DataFrame, pqCodebook: DataFrame, codes: DataFrame,
                          m: Int = 8, ksub: Int = 16,
                          rerankFactor: Int = 4): DataFrame = {
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m, ksub)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
   /** Residual IVFADC top-k — see [[ivfPqCandidates]] for the funnel;
@@ -844,12 +795,8 @@ object VectorOps {
                 centroids: Option[DataFrame] = None,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
                 rerankFactor: Int = 4): DataFrame = {
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val cand = ivfPqCandidates(corpus, queries, nProbe, centroids, m, ksub, iters)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * rerankFactor)
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-    exactCosRerank(cand, corpus, queries, k)
+    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
   /** The IVFADC leg of the recall-receipt family — rerank budget vs
@@ -869,7 +816,6 @@ object VectorOps {
       .select(col("query_id"), col("vec_id")).localCheckpoint(false))
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val maxF = factors.max
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
     val cent = centroids.getOrElse(sqrtCells(corpus, iters = 2)).localCheckpoint(false)
@@ -883,20 +829,18 @@ object VectorOps {
     // would silently mis-key a differently-shaped index)
     val (pqCodebook, codes) = index.getOrElse(
       ivfPqIndex(corpus, cent, m = m, ksub = ksub, iters = 2))
-    val scored = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes,
+    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes,
       m = m, ksub = ksub)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * maxF)
+    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
+        lit(k * maxF), "qrank")
       .join(c, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
       .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     val curve = factors.map { f =>
-      scored.filter(col("qrank") <= k * f)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      Rank.top(scored.filter(col("qrank") <= k * f), Seq(col("query_id")),
+          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
         .select(col("query_id"), col("vec_id"))
         .withColumn("method", lit("ivfpq"))
         .withColumn("param", lit(f.toLong))
@@ -927,20 +871,21 @@ object VectorOps {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, x) => acc + x)
 
-  /** Exact rerank: float vectors are touched only for candidate rows
-    * — a k·rerankFactor-per-query equi-join, never a second flat
-    * scan. `cand` carries (query_id, vec_id, qdist). */
-  private def exactCosRerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
-                             k: Int): DataFrame = {
+  /** Budget cut + exact rerank: each query keeps its first `budget`
+    * candidates by (qdist, vec_id), and float vectors are touched only
+    * for those rows — a k·rerankFactor-per-query equi-join, never a
+    * second flat scan. `cand` carries (query_id, vec_id, qdist), uncut. */
+  private def exactCosRerank(cand: DataFrame, budget: Int, corpus: DataFrame,
+                             queries: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val wr = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    cand
+    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
+        lit(budget), "qrank")
+      .select(col("query_id"), col("vec_id"), col("qdist"))
       .join(c, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
       .select(col("query_id"), col("rank"), col("vec_id"), col("qdist"), col("cos_sim"))
   }
 
@@ -1138,13 +1083,10 @@ object VectorOps {
       // map-only N×k distance rows through whole-stage codegen;
       // distances rounded before the argmin, ties on c_id — cell
       // assignment is run-deterministic
-      val assigned = vecs
+      val dists = vecs
         .crossJoin(broadcast(cent.toDF("c_id", "cvec")))
         .withColumn("d", roundn(fastL2Sq(col("e"), col("cvec")), 6))
-        .withColumn(
-          "rn",
-          row_number().over(Window.partitionBy(col("vec_id")).orderBy(col("d"), col("c_id"))))
-        .filter(col("rn") === 1)
+      val assigned = Rank.top(dists, Seq(col("vec_id")), Seq(col("d"), col("c_id")), lit(1))
         .select(col("vec_id"), col("c_id"))
       cent = localizeDense(
         dims
@@ -1281,13 +1223,11 @@ object VectorOps {
 
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-    candidates
+    val scored = candidates
       .join(c, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
 
@@ -1401,11 +1341,9 @@ object VectorOps {
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
       .select(col("query_id"), col("vec_id"), col("first_probe"), col("cos_sim"))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     val curve = nProbes.map { p =>
-      scored.filter(col("first_probe") <= p)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      Rank.top(scored.filter(col("first_probe") <= p), Seq(col("query_id")),
+          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
         .select(col("query_id"), col("vec_id"))
         .withColumn("method", lit("ivf"))
         .withColumn("param", lit(p.toLong))
@@ -1466,11 +1404,9 @@ object VectorOps {
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
       .select(col("query_id"), col("vec_id"), col("first_band"), col("cos_sim"))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     val curve = bands.map { b =>
-      scored.filter(col("first_band") < b)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      Rank.top(scored.filter(col("first_band") < b), Seq(col("query_id")),
+          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
         .select(col("query_id"), col("vec_id"))
         .withColumn("method", lit("srp"))
         .withColumn("param", lit(b.toLong))
@@ -1505,25 +1441,22 @@ object VectorOps {
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
     val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val wq = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("vec_id"))
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = codes.crossJoin(broadcast(qcodes))
+    val cand = codes.crossJoin(broadcast(qcodes))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= k * maxF)
+    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
+        lit(k * maxF), "qrank")
       .select(col("query_id"), col("vec_id"), col("qrank"))
       .join(c, "vec_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
       .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
       .localCheckpoint(false)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     val curve = factors.map { f =>
-      scored.filter(col("qrank") <= k * f)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      Rank.top(scored.filter(col("qrank") <= k * f), Seq(col("query_id")),
+          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
         .select(col("query_id"), col("vec_id"))
         .withColumn("method", lit("sq8"))
         .withColumn("param", lit(f.toLong))
@@ -1568,11 +1501,7 @@ object VectorOps {
           .as(s"cos_$d")): _*)
       .localCheckpoint(false)
     val curve = dims.map { d =>
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col(s"cos_$d").desc, col("vec_id"))
-      scored
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+      Rank.top(scored, Seq(col("query_id")), Seq(col(s"cos_$d").desc, col("vec_id")), lit(k))
         .select(col("query_id"), col("vec_id"))
         .withColumn("method", lit("trunc"))
         .withColumn("param", lit(d.toLong))
@@ -1686,14 +1615,11 @@ object VectorOps {
     val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val qe = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    cand
+    val scored = cand
       .join(c, "vec_id")
       .join(broadcast(qe), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
 
@@ -1725,11 +1651,8 @@ object VectorOps {
       .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
         .as("band_sig"))
       .localCheckpoint(false)
-    val flip = proj.filter(col("vec_id") < nQueries)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"), col("band"))
-          .orderBy(abs(col("proj")), col("out_dim"))))
-      .filter(col("rn") === 1)
+    val flip = Rank.top(proj.filter(col("vec_id") < nQueries), Seq(col("vec_id"), col("band")),
+        Seq(abs(col("proj")), col("out_dim")), lit(1))
       .select(col("vec_id"), col("band"),
         (col("out_dim") % bandBits).as("flip_pos"))
     val home = sig.filter(col("vec_id") < nQueries)
@@ -1744,14 +1667,11 @@ object VectorOps {
     val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val qe = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    cand
+    val scored = cand
       .join(c, "vec_id")
       .join(broadcast(qe), "query_id")
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= k)
+    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
 
@@ -1775,11 +1695,8 @@ object VectorOps {
     val home = sig.filter(col("vec_id") < nQueries)
     val base = home.select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
     val probes = if (!multiProbe) base else {
-      val flip = proj.filter(col("vec_id") < nQueries)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"), col("band"))
-            .orderBy(abs(col("proj")), col("out_dim"))))
-        .filter(col("rn") === 1)
+      val flip = Rank.top(proj.filter(col("vec_id") < nQueries),
+          Seq(col("vec_id"), col("band")), Seq(abs(col("proj")), col("out_dim")), lit(1))
         .select(col("vec_id"), col("band"),
           (col("out_dim") % bandBits).as("flip_pos"))
       base.unionByName(home.join(flip, Seq("vec_id", "band"))
@@ -2081,10 +1998,7 @@ object VectorOps {
         roundn(sqrt(roundn(fastL2Sq(col("ep"), col("eo")), 6)), 6).as("d"))
     val dist = distU.unionByName(distU.select(
       col("o_id").as("p_id"), col("p_id").as("o_id"), col("d")))
-    val knn = dist
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("p_id")).orderBy(col("d"), col("o_id"))))
-      .filter(col("rn") <= k)
+    val knn = Rank.top(dist, Seq(col("p_id")), Seq(col("d"), col("o_id")), lit(k))
       .select(col("p_id"), col("o_id"), col("d"))
       .localCheckpoint(false) // k rows per point, serves 3 legs
     val kd = knn.groupBy(col("p_id"))

@@ -10,15 +10,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(
-      "spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local("4", "WARN",
+    "spark.sql.warehouse.dir" -> java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }
