@@ -1473,11 +1473,8 @@ object DedupOps {
     * selected hashes per doc. Robust to small edits — the local-min
     * property survives shifting. */
   def winnowFingerprints(docs: DataFrame, w: Int = 3, window: Int = 4): DataFrame = {
-    val sh = wordShingles(docs, w)
-    // hash distinct shingles once, join back (same values, |vocab| sha calls)
-    val vocab = sh.select(col("shingle")).distinct()
+    val hashed = wordShingles(docs, w)
       .withColumn("h", PortableHash.hash24(col("shingle")))
-    val hashed = sh.join(vocab, "shingle")
     val frame = Window
       .partitionBy(col("doc_id"))
       .orderBy(col("pos"))

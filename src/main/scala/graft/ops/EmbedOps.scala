@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
 import graft.functions.VectorMath.roundn
@@ -19,10 +20,11 @@ import graft.functions.VectorMath.roundn
   *   → per-dim term counts → L2 normalize
   *   → empty text ⇒ zero vector (app_callapi.py:112 guard)
   *
-  * Everything is Catalyst builtins (one explode + one keyed agg), so
-  * the DuckDB oracle replicates it bit-for-bit and whole-stage codegen
-  * covers the hot path. At 100 TB this is a single shuffle keyed by
-  * (doc_id, dim) with map-side partial counts.
+  * Everything is Catalyst builtins (one explode, one keyed agg, one
+  * per-doc window), so the DuckDB oracle replicates it bit-for-bit and
+  * whole-stage codegen covers the hot path. At 100 TB this is one
+  * shuffle keyed by (doc_id, dim) with map-side partial counts, then
+  * a shuffle of the much smaller count table by doc_id for the norm.
   */
 object EmbedOps {
 
@@ -37,28 +39,20 @@ object EmbedOps {
 
   /** Sparse hashed-TF: (doc_id, dim, weight) with L2-normalized
     * weights. Exploded form — scalar-typed for the oracle; use
-    * [[embedDense]] for the Array[Float] column form. */
-  def embedSparse(docs: DataFrame, dim: Int = 64, maxTokens: Int = 512): DataFrame = {
-    // Hash each DISTINCT token once, then join the per-doc term counts
-    // back on it: sha-256 runs |vocab| times instead of |corpus tokens|
-    // times (identical results — the hash only depends on the token).
-    // At 100 TB the vocab side is orders of magnitude smaller than the
-    // token stream and broadcasts; AQE picks that up from stats.
-    val tf0 = tokenize(docs, maxTokens)
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val vocab = tf0.select(col("tok")).distinct()
-      .withColumn("dim", PortableHash.bucket(col("tok"), dim))
-    val tf = tf0
-      .join(vocab, "tok")
+    * [[embedDense]] for the Array[Float] column form.
+    *
+    * Each token is bucketed in the map stage that produces it, so the
+    * one (doc_id, dim) count aggregate partial-counts map-side; the
+    * norm is a window sum over the doc's dims. Counts are integers and
+    * their squares sum exactly below 2^53, so the weights do not
+    * depend on summation order. */
+  def embedSparse(docs: DataFrame, dim: Int = 64, maxTokens: Int = 512): DataFrame =
+    tokenize(docs, maxTokens)
+      .select(col("doc_id"), PortableHash.bucket(col("tok"), dim).as("dim"))
       .groupBy(col("doc_id"), col("dim"))
-      .agg(sum(col("tf")).cast("double").as("cnt"))
-    val norms = tf
-      .groupBy(col("doc_id"))
-      .agg(sqrt(sum(col("cnt") * col("cnt"))).as("nrm"))
-    tf.join(norms, "doc_id")
+      .agg(count(lit(1)).cast("double").as("cnt"))
+      .withColumn("nrm", sqrt(sum(col("cnt") * col("cnt")).over(Window.partitionBy(col("doc_id")))))
       .select(col("doc_id"), col("dim"), roundn(col("cnt") / col("nrm"), 6).as("weight"))
-  }
 
   /** Dense form: (doc_id, embedding Array[Float]) — the reference's
     * output shape (app.py:105). Built from the sparse form via a

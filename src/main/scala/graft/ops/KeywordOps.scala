@@ -92,7 +92,14 @@ object KeywordOps {
     * and 2-grams (KeyBERT CountVectorizer (1,2) analog, app.py:108)
     * passing the F4 stopword filter (app.py:108-110), scored by
     * corpus-level distinctiveness (tf·idf — deterministic stand-in
-    * for embedding-cosine), top-n per doc. */
+    * for embedding-cosine), top-n per doc.
+    *
+    * Scale shape: the (doc, gram) tf table is built in the doc_id
+    * partitioning of the lead window; the df window hash-partitions it
+    * by gram — the exchange a sort-merge join on gram would need at
+    * 100 TB — and the top-n cut re-partitions by doc_id. A window has
+    * no skew split: the partition of a very common gram runs in one
+    * task, where AQE could split a skewed join. */
   def keywordExtract(docs: DataFrame, n: Int = 8): DataFrame = {
     val toks = EmbedOps.tokenize(docs)
     val next = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -105,17 +112,17 @@ object KeywordOps {
           when(col("tok2").isNotNull, array(col("tok"), concat_ws(" ", col("tok"), col("tok2"))))
             .otherwise(array(col("tok")))).as("gram"))
       .filter(keepKeyword(col("gram")))
+    // df counts tf's (doc, gram) rows over a gram window, so the gram
+    // stream is planned once; a groupBy + join-back on tf would plan
+    // the tokenize → lead → explode branch a second time
     val tf = grams.groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos"))
-    // df derived FROM tf (one row per (doc, gram) already) — the
-    // gram explosion is evaluated once, not twice
-    val df = tf.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("gram"))))
     // n_docs as a 1-row aggregate broadcast-cross-joined in — NOT a
     // driver-side count(): query construction stays lazy, no extra
     // eager corpus scan per call
     val nDocs = docs.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
     val scored = tf
-      .join(df, "gram")
       .crossJoin(broadcast(nDocs))
       .withColumn(
         "score",

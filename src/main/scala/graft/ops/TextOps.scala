@@ -286,12 +286,11 @@ object TextOps {
     * sums — merge-order-free, bit-identical across engines; argmax
     * breaks ties on lang asc.
     *
-    * Scale shape: trigram explode is map-side; the vocab is hashed
-    * once (distinct-gram join, the embedSparse pattern); training
+    * Scale shape: trigram explode and bucketing are map-side; training
     * aggs key on (lang, bucket) ≤ |langs|·4096 rows — the weight
     * table broadcasts; scoring is one (doc, bucket)-keyed agg fed by
     * a broadcast join, then a per-doc 5-row argmax window. Nothing
-    * shuffles more than the trigram tf table. */
+    * shuffles more than the (doc, bucket) feature table. */
   def langIdLearned(docs: DataFrame, nBuckets: Int = 4096): DataFrame = {
     val feat = nbLangFeatures(docs, nBuckets)
     nbLangApply(docs, feat, nbLangTrain(docs, feat, nBuckets))
@@ -299,8 +298,8 @@ object TextOps {
 
   /** The hashed char-trigram feature table (doc_id, bucket, tf) both
     * NB halves consume — materialized once: TWO consumers (training
-    * counts + scoring) would otherwise plant the explode→tf→hash→
-    * bucket chain in the plan twice (measured 7.8 → ~4.5 s at sf0.1;
+    * counts + scoring) would otherwise plant the explode→hash→count
+    * chain in the plan twice (measured 7.8 → ~4.5 s at sf0.1;
     * blocks freed by the ContextCleaner when dropped). */
   def nbLangFeatures(docs: DataFrame, nBuckets: Int = 4096): DataFrame = {
     import graft.functions.PortableHash
@@ -310,13 +309,9 @@ object TextOps {
         explode(when(length(col("t")) >= 3,
           sequence(lit(1), length(col("t")) - 2)).otherwise(array()))
           .as("i"), col("t"))
-      .select(col("doc_id"), expr("substring(t, i, 3)").as("g"))
-    val tf = grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("tf"))
-    // hash each DISTINCT trigram once, join back (embedSparse pattern)
-    val vocab = tf.select(col("g")).distinct()
-      .withColumn("b", PortableHash.bucket(col("g"), nBuckets))
-    tf.join(vocab, "g")
-      .groupBy(col("doc_id"), col("b")).agg(sum(col("tf")).as("tf"))
+      .select(col("doc_id"),
+        PortableHash.bucket(expr("substring(t, i, 3)"), nBuckets).as("b"))
+    grams.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("tf"))
       .localCheckpoint(false)
   }
 

@@ -281,4 +281,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"),
       "the rn=1 filter must push a partial top-1 below the window shuffle")
   }
+
+  for (q <- Seq("embed_text", "doc_fingerprint"))
+    test(s"$q: each token is hashed where it is read — no vocabulary join-back") {
+      val p = planOf(q)
+      assert(!p.contains("Join"), s"$q plan holds a join:\n$p")
+    }
+
+  test("keyword_extract: the gram stream is planned once — one posexplode") {
+    val p = planOf("keyword_extract")
+    assert("Generate posexplode".r.findAllIn(p).size === 1, p)
+  }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.PortableHash
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class DedupOpsSpec extends SparkSpec {
@@ -825,5 +828,29 @@ class DedupOpsSpec extends SparkSpec {
       assert(x.getAs[Long]("mae_micro") === 0L,
         s"b=${x.getAs[Long]("b_bits")}: identical signatures estimate J=1 exactly")
     }
+  }
+
+  /** winnowFingerprints as written before per-row hashing, kept as the
+    * parity reference: each distinct shingle hashed once and joined
+    * back onto the shingle stream. */
+  private def winnowJoinBack(docs: DataFrame, w: Int, window: Int): DataFrame = {
+    val sh = DedupOps.wordShingles(docs, w)
+    val vocab = sh.select(col("shingle")).distinct()
+      .withColumn("h", PortableHash.hash24(col("shingle")))
+    val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.currentRow, window - 1)
+    sh.join(vocab, "shingle")
+      .withColumn("fp", min(col("h")).over(frame))
+      .select(col("doc_id"), col("fp"))
+      .distinct()
+  }
+
+  test("winnowFingerprints equals the join-back formulation row for row") {
+    val d = ParityDocs(spark)
+    for ((w, window) <- Seq((3, 4), (2, 1), (5, 3)))
+      assertSameRows(DedupOps.winnowFingerprints(d, w, window), winnowJoinBack(d, w, window))
+    val ids = DedupOps.winnowFingerprints(d).select("doc_id").as[Long].collect().toSet
+    assert(Seq(2L, 3L, 5L, 6L, 7L).forall(i => !ids.contains(i)),
+      "docs shorter than w tokens have no fingerprint")
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.PortableHash
+import graft.functions.VectorMath.roundn
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class EmbedOpsSpec extends SparkSpec {
@@ -28,6 +31,34 @@ class EmbedOpsSpec extends SparkSpec {
     val w0 = w.filter($"doc_id" === 0).orderBy("dim").collect().map(r => (r.getLong(1), r.getDouble(2)))
     val w2 = w.filter($"doc_id" === 2).orderBy("dim").collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(w0.toSeq === w2.toSeq) // same text → same embedding
+  }
+
+  /** embedSparse as written before per-row bucketing, kept as the
+    * parity reference: each distinct token hashed once and joined back
+    * onto the per-doc term counts, the norms joined back on doc_id. */
+  private def embedSparseJoinBack(docs: DataFrame, dim: Int): DataFrame = {
+    val tf0 = EmbedOps.tokenize(docs)
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"))
+    val vocab = tf0.select(col("tok")).distinct()
+      .withColumn("dim", PortableHash.bucket(col("tok"), dim))
+    val tf = tf0
+      .join(vocab, "tok")
+      .groupBy(col("doc_id"), col("dim"))
+      .agg(sum(col("tf")).cast("double").as("cnt"))
+    val norms = tf
+      .groupBy(col("doc_id"))
+      .agg(sqrt(sum(col("cnt") * col("cnt"))).as("nrm"))
+    tf.join(norms, "doc_id")
+      .select(col("doc_id"), col("dim"), roundn(col("cnt") / col("nrm"), 6).as("weight"))
+  }
+
+  test("embedSparse equals the join-back formulation row for row (dim 2 forces collisions)") {
+    val d = ParityDocs(spark)
+    for (dim <- Seq(2, 64, 4096))
+      assertSameRows(EmbedOps.embedSparse(d, dim), embedSparseJoinBack(d, dim))
+    // dim 2: every doc with two distinct buckets has weights below 1
+    assert(EmbedOps.embedSparse(d, 2).filter($"weight" < 1.0).count() > 0)
   }
 
   test("embedSparse: empty text produces no weight rows") {

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class KeywordOpsSpec extends SparkSpec {
@@ -61,5 +63,48 @@ class KeywordOpsSpec extends SparkSpec {
       .filter($"doc_id" === 0).select("keyword").as[String].collect().toSet
     assert(!ext.exists(_.split(" ").exists(KeywordOps.StopwordsEn.contains)))
     assert(ext.contains("spark engine"))
+  }
+
+  /** keywordExtract as written before the df window, kept as the
+    * parity reference: df is a groupBy on the tf table joined back on
+    * gram, which plans the gram stream twice. */
+  private def keywordExtractJoinBack(docs: DataFrame, n: Int): DataFrame = {
+    val next = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val grams = EmbedOps.tokenize(docs)
+      .withColumn("tok2", lead(col("tok"), 1).over(next))
+      .select(
+        col("doc_id"),
+        col("pos"),
+        explode(
+          when(col("tok2").isNotNull, array(col("tok"), concat_ws(" ", col("tok"), col("tok2"))))
+            .otherwise(array(col("tok")))).as("gram"))
+      .filter(KeywordOps.keepKeyword(col("gram")))
+    val tf = grams.groupBy(col("doc_id"), col("gram"))
+      .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos"))
+    val df = tf.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+    val nDocs = docs.agg(countDistinct(col("doc_id")).cast("double").as("n_docs"))
+    val scored = tf
+      .join(df, "gram")
+      .crossJoin(broadcast(nDocs))
+      .withColumn(
+        "score",
+        round(col("tf") * log((col("n_docs") + 1) / (col("df") + 1)), 6) + lit(0.0))
+    Rank.top(scored, Seq(col("doc_id")),
+        Seq(col("tf").desc, col("df"), col("gram"), col("first_pos")), lit(n))
+      .select(col("doc_id"), col("rank"), col("gram").as("keyword"), col("score"))
+  }
+
+  test("keywordExtract equals the join-back formulation row for row") {
+    for (d <- Seq(ParityDocs(spark), ParityDocs.withSharedGram(spark)); n <- Seq(1, 3, 8))
+      assertSameRows(KeywordOps.keywordExtract(d, n), keywordExtractJoinBack(d, n))
+  }
+
+  test("keywordExtract: a gram in every doc scores 0; a one-token doc gets only its token") {
+    val r = KeywordOps.keywordExtract(ParityDocs.withSharedGram(spark), n = 50)
+    val shared = r.filter($"keyword" === "shared").select("score").as[Double].collect()
+    assert(shared.length === ParityDocs.edgeCases.size + 40 && shared.forall(_ === 0.0))
+    val solo = KeywordOps.keywordExtract(ParityDocs(spark), n = 50).filter($"doc_id" === 5)
+      .select("keyword").as[String].collect()
+    assert(solo.toSeq === Seq("solo"))
   }
 }

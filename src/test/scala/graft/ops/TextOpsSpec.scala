@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.PortableHash
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkSpec {
@@ -1220,5 +1222,32 @@ class TextOpsSpec extends SparkSpec {
     val enc = (df: org.apache.spark.sql.DataFrame) =>
       df.orderBy("syms").as[(Long, String)].collect().toSeq
     assert(enc(wL) === enc(wD))
+  }
+
+  /** nbLangFeatures as written before per-row bucketing, kept as the
+    * parity reference: (doc, trigram) counts, each distinct trigram
+    * hashed once and joined back, then summed per (doc, bucket). */
+  private def nbLangFeaturesJoinBack(docs: DataFrame, nBuckets: Int): DataFrame = {
+    val grams = docs
+      .select(col("doc_id"), lower(col("text")).as("t"))
+      .select(col("doc_id"),
+        explode(when(length(col("t")) >= 3,
+          sequence(lit(1), length(col("t")) - 2)).otherwise(array()))
+          .as("i"), col("t"))
+      .select(col("doc_id"), expr("substring(t, i, 3)").as("g"))
+    val tf = grams.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("tf"))
+    val vocab = tf.select(col("g")).distinct()
+      .withColumn("b", PortableHash.bucket(col("g"), nBuckets))
+    tf.join(vocab, "g")
+      .groupBy(col("doc_id"), col("b")).agg(sum(col("tf")).as("tf"))
+  }
+
+  test("nbLangFeatures equals the join-back formulation row for row (2 buckets force collisions)") {
+    val d = ParityDocs(spark)
+    for (nb <- Seq(2, 4096))
+      assertSameRows(TextOps.nbLangFeatures(d, nb), nbLangFeaturesJoinBack(d, nb))
+    val ids = TextOps.nbLangFeatures(d, 2).select("doc_id").as[Long].collect().toSet
+    assert(!ids.contains(6L) && !ids.contains(3L) && !ids.contains(2L),
+      "text shorter than 3 chars, null and empty text have no trigram")
   }
 }
