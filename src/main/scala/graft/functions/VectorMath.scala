@@ -93,4 +93,50 @@ object VectorMath {
     val n = norm(v)
     when(n === 0.0, v).otherwise(transform(v, x => x / n))
   }
+
+  // ---- JVM twins of the column kernels (for loops outside Catalyst) ----
+
+  /** `roundn(x, 6)` on the JVM: Spark's `round` on a double (HALF_UP on
+    * the shortest decimal string of `x`; NaN and ±∞ pass through), then
+    * `+ 0.0`, which turns -0.0 into 0.0. */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
+
+  /** The `n` cells nearest `e`, nearest first, as (index into `cells`,
+    * distance): the JVM twin of `roundn(fastL2Sq(e, cell), 6)` ranked
+    * by (distance, id). The fold is [[fastL2Sq]]'s (ascending index over
+    * the common prefix), every distance is rounded before it is
+    * compared, and equal distances go to the lower id. `ids(i)` is the
+    * id of `cells(i)`. */
+  def nearestCells(e: Array[Double], ids: Array[Long], cells: Array[Array[Double]],
+                   n: Int): Array[(Int, Double)] = {
+    val d = new Array[Double](cells.length)
+    var c = 0
+    while (c < cells.length) {
+      val v = cells(c)
+      val m = math.min(e.length, v.length)
+      var s = 0.0
+      var i = 0
+      while (i < m) { val x = e(i) - v(i); s += x * x; i += 1 }
+      d(c) = round6(s)
+      c += 1
+    }
+    // n argmin passes: n is 1 or a small nAssign, so this beats a sort
+    val taken = new Array[Boolean](cells.length)
+    Array.fill(math.min(n, cells.length)) {
+      var best = -1
+      var c = 0
+      while (c < cells.length) {
+        if (!taken(c) && (best < 0 || {
+          val o = java.lang.Double.compare(d(c), d(best))
+          o < 0 || (o == 0 && ids(c) < ids(best))
+        })) best = c
+        c += 1
+      }
+      taken(best) = true
+      (best, d(best))
+    }
+  }
 }

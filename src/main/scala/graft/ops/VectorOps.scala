@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorMath._
 
 /** Vector-search operators — the reference's heart (flat-L2 KNN +
@@ -485,8 +486,8 @@ object VectorOps {
     *
     * Build: split each vector into `m` contiguous subvectors (a
     * map-side `slice`, no shuffle); per subspace, k-means with `ksub`
-    * centroids (the relational Lloyd shape of [[kmeansCells]] with
-    * the subspace id riding the grouping keys — ONE pipeline trains
+    * centroids (a relational, exploded-dim Lloyd with the subspace
+    * id riding the grouping keys — ONE pipeline trains
     * all m codebooks); encode = nearest-code argmin per (vector,
     * subspace) via partial-aggregated `min_by` on rounded distances.
     * At 100 TB train the codebooks on a SAMPLE (the standard PQ
@@ -905,18 +906,15 @@ object VectorOps {
       roundn(array_max(col("embedding")).cast("double"), 6).as("v_max"),
       size(col("embedding")).cast("long").as("n_dims"))
 
-  /** Relational Lloyd iterations: refine centroids by repeated
-    * assign → per-cell mean, entirely in exploded-dim DataFrame form
-    * (each iteration = one broadcast join + two keyed aggregations;
-    * at scale this is the standard k-means-on-Spark shape without
-    * MLlib's private vector types). Seeds from [[meanPoolByLabel]]
-    * (label centroids); `iters` rounds of refinement. Deterministic:
-    * distances rounded before argmin, ties on centroid id. */
+  /** Lloyd-refined label centroids: seeded from [[meanPoolByLabel]]
+    * (c_id = label), then `iters` [[lloyd]] rounds. Output: the local
+    * (c_id, dim, cv) table. Deterministic: distances rounded before the
+    * argmin, ties on centroid id. */
   def kmeansCentroids(embeddings: DataFrame, iters: Int): DataFrame =
-    lloyd(embeddings, iters,
+    cellTable(embeddings.sparkSession, lloyd(embeddings, iters,
       meanPoolByLabel(embeddings)
         .select(col("label").cast("long").as("c_id"), col("dim"),
-          col("centroid_val").as("cv")))
+          col("centroid_val").as("cv"))))
 
   /** K-means cells for IVF at a chosen cell count — the √N-cells
     * policy the quantizer needs when labels are absent or too coarse
@@ -925,7 +923,14 @@ object VectorOps {
     * vectors by vec_id are the initial centroids (c_id = vec_id),
     * refined by `iters` Lloyd rounds. Output shape matches ivfTopK's
     * `centroids` parameter: (c_label, dim, cv). */
-  def kmeansCells(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
+  def kmeansCells(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
+    cellTable(embeddings.sparkSession, kmeansCellsDense(embeddings, k, iters))
+      .select(col("c_id").as("c_label"), col("dim"), col("cv"))
+
+  /** [[kmeansCells]] as the trainer returns it: dense (c_id, centroid)
+    * pairs in ascending c_id. */
+  private def kmeansCellsDense(embeddings: DataFrame, k: Int,
+                               iters: Int): Seq[(Long, Array[Double])] = {
     val seeds = embeddings
       .filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"),
@@ -933,7 +938,6 @@ object VectorOps {
       .withColumn("dim", col("dim").cast("long"))
       .select(col("c_id"), col("dim"), roundn(col("x"), 6).as("cv"))
     lloyd(embeddings, iters, seeds)
-      .select(col("c_id").as("c_label"), col("dim"), col("cv"))
   }
 
   /** [[kmeansCells]] with the cell count derived from the data:
@@ -950,8 +954,20 @@ object VectorOps {
     * derive the probe budget from it ([[probePolicy]]) without a
     * second eager `count()`. */
   def sqrtCellsWithK(embeddings: DataFrame, iters: Int): (Int, DataFrame) = {
-    val k = math.ceil(math.sqrt(embeddings.count().toDouble)).toInt
+    val k = sqrtK(embeddings)
     (k, kmeansCells(embeddings, k, iters))
+  }
+
+  private def sqrtK(embeddings: DataFrame): Int =
+    math.ceil(math.sqrt(embeddings.count().toDouble)).toInt
+
+  /** Dense centroids as the local (c_id, dim, cv) table the callers
+    * join and the oracle mirrors. */
+  private def cellTable(spark: SparkSession, cent: Seq[(Long, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    cent.flatMap { case (id, arr) =>
+      arr.zipWithIndex.map { case (v, d) => (id, d.toLong, v) }
+    }.toDF("c_id", "dim", "cv")
   }
 
   /** Codebook REFRESH receipt — the re-Lloyd that [[ivfIncrementalTopK]]'s
@@ -1028,76 +1044,118 @@ object VectorOps {
   def probePolicy(numCells: Int): (Int, Int) =
     (math.max(3, math.ceil(numCells / 16.0).toInt), 2)
 
-  /** Ceiling on the (c_id, dim) centroid cells [[lloyd]] will localize
-    * to the driver: 2²² ≈ 4.2M cells ≈ 32 MB of dense doubles (plus
-    * row overhead) — comfortably inside a default driver heap and the
-    * per-task broadcast budget. Under the √N-cells policy with
-    * d = 64 this allows k ≈ 65k cells ⇔ N ≈ 4.3B vectors; beyond
-    * that the centroid table itself must stay distributed (hierarchical
-    * / sharded k-means), which is a different algorithm — fail loudly
-    * rather than silently OOM the driver. */
+  /** Ceiling on the (c_id, dim) centroid cells [[lloyd]] holds on the
+    * driver and broadcasts to every task each round, next to one k×d
+    * sum buffer per task: 2²² ≈ 4.2M cells ≈ 32 MB of dense doubles —
+    * comfortably inside a default driver heap and the per-task
+    * broadcast budget. Under the √N-cells policy with d = 64 this
+    * allows k ≈ 65k cells ⇔ N ≈ 4.3B vectors; beyond that the centroid
+    * table itself must stay distributed (hierarchical / sharded
+    * k-means), which is a different algorithm — fail loudly rather
+    * than silently OOM the driver. */
   private[ops] val MaxCentroidCells: Long = 1L << 22
 
   /** The guard itself, factored out so the failure contract is
     * unit-testable without materializing an over-limit table. */
   private[ops] def requireCentroidBudget(nCells: Long, limit: Long = MaxCentroidCells): Unit =
     require(nCells <= limit,
-      s"lloyd: centroid table has $nCells (c_id, dim) cells > limit $limit — centroids " +
-        s"localize to the driver and broadcast to every task each iteration " +
-        s"(~${nCells * 8} bytes dense + per-row overhead). At this k·d keep the " +
+      s"lloyd: centroid table has at least $nCells (c_id, dim) cells > limit $limit — " +
+        s"centroids localize to the driver and broadcast to every task each iteration " +
+        s"(at least ${nCells * 8} bytes dense + per-row overhead). At this k·d keep the " +
         "centroid table distributed (hierarchical/sharded k-means) instead.")
 
-  private def lloyd(embeddings: DataFrame, iters: Int, seedCent: DataFrame): DataFrame = {
+  /** Lloyd's k-means: refines the seed centroids `seedCent` ((c_id,
+    * dim, cv) rows) by `iters` rounds and returns them dense, as
+    * (c_id, centroid) in ascending c_id.
+    *
+    * Each round is one map-side pass over the persisted vectors and
+    * one Spark job. The centroids go to the tasks as a broadcast dense
+    * array. Each task assigns every vector to its nearest centroid with
+    * [[nearestCells]] — the fold, 6dp rounding and (d, c_id) tie order
+    * of `roundn(fastL2Sq(e, c), 6)` ranked by [[Rank.top]] — and folds
+    * it into per-cell, per-dim sums and counts. `treeAggregate` merges
+    * the partials on the executors, so the driver receives one k×d
+    * buffer, and the driver turns it into the next centroids.
+    *
+    * The new centroid is, per dim, `roundn(sum / count, 6)` over the
+    * members that carry that dim — the per-(c_id, dim) `avg` of the
+    * exploded form: a ragged dim averages only over the vectors long
+    * enough to have it, null and empty embeddings contribute nothing,
+    * and a seed that loses every member drops out. (A null element
+    * inside a vector reads as 0.0, as in the distance kernel.) The
+    * float-sum order across partitions follows the merge tree, which
+    * is no more fixed than a shuffled `avg`'s; the 6dp rounding
+    * absorbs it, as it did there.
+    *
+    * The seed is collected through a `limit` of `limit` + 1 cells:
+    * assignment never adds a c_id, and over equal-length vectors the
+    * dims are fixed, so the seed's cell count is the loop's, and an
+    * over-limit seed fails without being collected whole. */
+  private[ops] def lloyd(embeddings: DataFrame, iters: Int, seedCent: DataFrame,
+                         limit: Long = MaxCentroidCells): Seq[(Long, Array[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // one cheap count on the (small) seed table bounds every
-    // localizeDense below: assignment never adds centroid ids and the
-    // dim set is fixed, so the seed's cell count is the loop's
-    requireCentroidBudget(seedCent.count())
-    // the narrow (vec_id, dense-array) projection feeds the assignment
-    // kernel every iteration; the exploded view derives from it for
-    // the per-dim mean update — persist the projection once
-    val vecs = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .persist()
-    def dims = vecs
-      .select(col("vec_id"), posexplode(col("e")).as(Seq("dim", "x")))
-      .withColumn("dim", col("dim").cast("long"))
+    val seed = seedCent.select(col("c_id"), col("dim"), col("cv"))
+      .limit(math.min(limit + 1, Int.MaxValue.toLong).toInt)
+      .as[(Long, Long, Double)].collect()
+    requireCentroidBudget(seed.length.toLong, limit)
+    var cent = seed.toSeq.groupBy(_._1).toSeq
+      .map { case (id, rows) => (id, rows.sortBy(_._2).map(_._3).toArray) }
+      .sortBy(_._1)
 
-    // centroids are k rows of dims doubles: materialize to the driver
-    // each iteration (the standard k-means-on-Spark shape) as DENSE
-    // arrays — the broadcast side of the codegen'd FastL2Sq kernel.
-    // A single-row array fold involves no aggregation, hence no
-    // partial-merge order to harden against: deterministic by
-    // construction, in ascending dim order like the oracle's
-    // sum(... ORDER BY dim).
-    def localizeDense(df: DataFrame): Seq[(Long, Seq[Double])] =
-      df.select(col("c_id"), col("dim"), col("cv")).as[(Long, Long, Double)]
-        .collect().toSeq.groupBy(_._1).toSeq
-        .map { case (id, rows) => (id, rows.sortBy(_._2).map(_._3)) }
-        .sortBy(_._1)
-
-    var cent = localizeDense(seedCent)
-
-    for (_ <- 1 to iters) {
-      // map-only N×k distance rows through whole-stage codegen;
-      // distances rounded before the argmin, ties on c_id — cell
-      // assignment is run-deterministic
-      val dists = vecs
-        .crossJoin(broadcast(cent.toDF("c_id", "cvec")))
-        .withColumn("d", roundn(fastL2Sq(col("e"), col("cvec")), 6))
-      val assigned = Rank.top(dists, Seq(col("vec_id")), Seq(col("d"), col("c_id")), lit(1))
-        .select(col("vec_id"), col("c_id"))
-      cent = localizeDense(
-        dims
-          .join(assigned, "vec_id")
-          .groupBy(col("c_id"), col("dim"))
-          .agg(roundn(avg(col("x")), 6).as("cv")))
+    val vecs = embeddings.select(asDouble(col("embedding")).as("e"))
+      .filter(size(col("e")) > 0)
+      .queryExecution.toRdd.map(_.getArray(0).toDoubleArray())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    for (_ <- 1 to iters if cent.nonEmpty) {
+      val ids = cent.map(_._1).toArray
+      val cells = spark.sparkContext.broadcast(cent.map(_._2).toArray)
+      val sums = vecs.treeAggregate(new CellSums(ids.length),
+        (acc: CellSums, e: Array[Double]) => acc.add(nearestCells(e, ids, cells.value, 1)(0)._1, e),
+        (a: CellSums, b: CellSums) => a.merge(b), depth = 2, finalAggregateOnExecutor = true)
+      cells.destroy()
+      cent = ids.indices.flatMap(c => sums.mean(c).map(ids(c) -> _))
     }
     vecs.unpersist()
-    cent.flatMap { case (id, arr) =>
-      arr.zipWithIndex.map { case (v, d) => (id, d.toLong, v) }
-    }.toDF("c_id", "dim", "cv")
+    cent
+  }
+
+  /** Per-cell, per-dim sums and member counts of one [[lloyd]] round.
+    * A cell's arrays grow to the length of its longest member, so each
+    * dim counts only the members that carry it. */
+  private final class CellSums(k: Int) extends Serializable {
+    private val sums = new Array[Array[Double]](k)
+    private val counts = new Array[Array[Long]](k)
+
+    private def grow(c: Int, n: Int): Unit =
+      if (sums(c) == null) { sums(c) = new Array(n); counts(c) = new Array(n) }
+      else if (sums(c).length < n) {
+        sums(c) = java.util.Arrays.copyOf(sums(c), n)
+        counts(c) = java.util.Arrays.copyOf(counts(c), n)
+      }
+
+    def add(c: Int, e: Array[Double]): CellSums = {
+      grow(c, e.length)
+      val s = sums(c); val n = counts(c)
+      var i = 0
+      while (i < e.length) { s(i) += e(i); n(i) += 1; i += 1 }
+      this
+    }
+
+    def merge(o: CellSums): CellSums = {
+      for (c <- 0 until k if o.sums(c) != null) {
+        grow(c, o.sums(c).length)
+        val s = sums(c); val n = counts(c)
+        var i = 0
+        while (i < o.sums(c).length) { s(i) += o.sums(c)(i); n(i) += o.counts(c)(i); i += 1 }
+      }
+      this
+    }
+
+    /** Cell `c`'s next centroid, `roundn(sum / count, 6)` per dim; None
+      * when no vector chose the cell. */
+    def mean(c: Int): Option[Array[Double]] =
+      Option(sums(c)).map(s => Array.tabulate(s.length)(i => round6(s(i) / counts(c)(i))))
   }
 
   /** K-means as a first-class clustering RESULT (not just the ANN
@@ -1115,16 +1173,30 @@ object VectorOps {
     * that exact integer. Empty cells (seeds that lost every member)
     * simply have no row, matching the oracle's GROUP BY.
     *
-    * Scale shape: centroids broadcast ([[cellRanks]]); the argmin is
-    * a per-vector window over k broadcast rows; the stats agg shuffles
-    * on the uniform c_label key with map-side partials. */
+    * Scale shape: the dense centroids come straight from [[lloyd]]
+    * and are broadcast as ONE row; each vector's nearest cell is the
+    * minimum of its k (cdist, c_label) structs — map-side, with the
+    * order [[cellRanks]]' window ranks by (a null embedding, whose
+    * distances are all null, goes to the lowest c_label, nulls first).
+    * The only shuffle is the stats agg on the uniform c_label key, with
+    * map-side partials. */
   def kmeansClusterStats(embeddings: DataFrame, iters: Int = 2): DataFrame = {
-    val cent = sqrtCells(embeddings, iters)
-    cellRanks(embeddings, cent, "vec_id")
-      .filter(col("cell_rank") === 1)
-      .groupBy(col("c_label"))
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val cent = kmeansCellsDense(embeddings, sqrtK(embeddings), iters)
+    // no cells, no row: the filter folds into the local table, so a
+    // vector never meets an empty cell list
+    val cells = Seq(cent.map { case (id, v) => (id, v.toSeq) }).toDF("cells")
+      .filter(size(col("cells")) > 0)
+    val nearest = array_min(transform(col("cells"), c => struct(
+      roundn(fastL2Sq(col("e"), c.getField("_2")), 6).as("cdist"),
+      c.getField("_1").as("c_label"))))
+    embeddings.select(asDouble(col("embedding")).as("e"))
+      .crossJoin(broadcast(cells))
+      .select(nearest.as("near"))
+      .groupBy(col("near.c_label").as("c_label"))
       .agg(count(lit(1)).as("n_vecs"),
-        sum(round(col("cdist") * 1e6).cast("long")).as("inertia6"))
+        sum(round(col("near.cdist") * 1e6).cast("long")).as("inertia6"))
       .select(col("c_label"), col("n_vecs"),
         roundn(col("inertia6").cast("double") / 1e6, 6).as("inertia"))
   }
@@ -1156,8 +1228,9 @@ object VectorOps {
 
   /** IVF-style approximate top-k — the 100 TB scale path for
     * [[annTopK]]: a coarse quantizer (here: per-label centroids from
-    * [[meanPoolByLabel]] — at scale, k-means iterations of the same
-    * explode/avg shape) assigns every vector to its nearest centroid;
+    * [[meanPoolByLabel]] — at scale, the √N [[kmeansCells]] codebook,
+    * whose [[lloyd]] rounds are one map-side pass each) assigns every
+    * vector to its nearest centroid;
     * a query probes only its `nProbe` nearest cells and runs the exact
     * cosine kernel inside them. The full cross join never happens:
     * candidate generation is an equi-join on the cell id.

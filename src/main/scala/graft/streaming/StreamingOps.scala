@@ -1014,24 +1014,17 @@ object StreamingOps {
   case class CellCount(c_label: Long, n_vecs: Long)
 
   /** Row-local twin of the batch [[graft.ops.VectorOps.cellRanks]]
-    * kernel for ONE vector — the same fold the codegen'd L2SqDistance
-    * runs (sequential per-dim sum), the same HALF_UP 6dp rounding the
-    * batch applies BEFORE any rank decision, the same (cdist,
-    * c_label) tie order. Spec-pinned bit-equal to the batch SQL. */
+    * kernel for ONE vector: [[graft.functions.VectorMath.nearestCells]],
+    * the fold, HALF_UP 6dp rounding and (cdist, c_label) tie order the
+    * batch SQL applies before any rank decision. Spec-pinned bit-equal
+    * to the batch SQL. */
   def cellRanksJvm(emb: Seq[Float], centroids: Seq[(Long, Array[Double])],
                    nAssign: Int): Seq[(Long, Double, Int)] = {
-    val e = emb.map(_.toDouble).toArray
-    centroids.map { case (label, c) =>
-      val n = math.min(e.length, c.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) { val d = e(i) - c(i); s += d * d; i += 1 }
-      val r = java.math.BigDecimal.valueOf(s)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
-      (label, r)
-    }.sortBy { case (l, d) => (d, l) }
-      .take(nAssign).zipWithIndex
-      .map { case ((l, d), i) => (l, d, i + 1) }
+    val ids = centroids.map(_._1).toArray
+    graft.functions.VectorMath
+      .nearestCells(emb.map(_.toDouble).toArray, ids, centroids.map(_._2).toArray, nAssign)
+      .toSeq.zipWithIndex
+      .map { case ((c, d), i) => (ids(c), d, i + 1) }
   }
 
   /** Localize a codebook DataFrame ((c_label, dim, cv) exploded form,

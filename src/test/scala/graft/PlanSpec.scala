@@ -292,4 +292,9 @@ class PlanSpec extends SparkSpec {
     val p = planOf("keyword_extract")
     assert("Generate posexplode".r.findAllIn(p).size === 1, p)
   }
+
+  test("kmeans_clusters: each vector's nearest cell is map-side — no window, no collect_list") {
+    val p = planOf("kmeans_clusters")
+    assert(!p.contains("Window") && !p.contains("collect_list"), p)
+  }
 }

@@ -1,6 +1,13 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import graft.functions.VectorMath
+import graft.functions.VectorMath._
+import org.apache.spark.graftbridge.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class KMeansSpec extends SparkSpec {
@@ -81,5 +88,168 @@ class KMeansSpec extends SparkSpec {
     val again = VectorOps.kmeansClusterStats(emb, iters = 2).collect()
     assert(stats.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ===
       again.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+  }
+
+  // ---- the exploded-dim DataFrame Lloyd the map-side rounds replaced,
+  // ---- kept as the parity reference
+
+  private def refLloyd(embeddings: DataFrame, iters: Int, seedCent: DataFrame): DataFrame = {
+    val vecs = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+    val dims = vecs
+      .select(col("vec_id"), posexplode(col("e")).as(Seq("dim", "x")))
+      .withColumn("dim", col("dim").cast("long"))
+    def localizeDense(df: DataFrame): Seq[(Long, Seq[Double])] =
+      df.select(col("c_id"), col("dim"), col("cv")).as[(Long, Long, Double)]
+        .collect().toSeq.groupBy(_._1).toSeq
+        .map { case (id, rows) => (id, rows.sortBy(_._2).map(_._3)) }
+        .sortBy(_._1)
+    var cent = localizeDense(seedCent)
+    for (_ <- 1 to iters) {
+      val dists = vecs
+        .crossJoin(broadcast(cent.toDF("c_id", "cvec")))
+        .withColumn("d", roundn(fastL2Sq(col("e"), col("cvec")), 6))
+      val assigned = Rank.top(dists, Seq(col("vec_id")), Seq(col("d"), col("c_id")), lit(1))
+        .select(col("vec_id"), col("c_id"))
+      cent = localizeDense(
+        dims.join(assigned, "vec_id")
+          .groupBy(col("c_id"), col("dim"))
+          .agg(roundn(avg(col("x")), 6).as("cv")))
+    }
+    cent.flatMap { case (id, arr) =>
+      arr.zipWithIndex.map { case (v, d) => (id, d.toLong, v) }
+    }.toDF("c_id", "dim", "cv")
+  }
+
+  private def refKmeansCells(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    refLloyd(emb, iters, emb.filter(col("vec_id") < k)
+      .select(col("vec_id").as("c_id"),
+        posexplode(asDouble(col("embedding"))).as(Seq("dim", "x")))
+      .select(col("c_id"), col("dim").cast("long").as("dim"), roundn(col("x"), 6).as("cv")))
+      .select(col("c_id").as("c_label"), col("dim"), col("cv"))
+
+  private def refSqrtCells(emb: DataFrame, iters: Int): DataFrame =
+    refKmeansCells(emb, math.ceil(math.sqrt(emb.count().toDouble)).toInt, iters)
+
+  private def refKmeansCentroids(emb: DataFrame, iters: Int): DataFrame =
+    refLloyd(emb, iters, VectorOps.meanPoolByLabel(emb)
+      .select(col("label").cast("long").as("c_id"), col("dim"), col("centroid_val").as("cv")))
+
+  private def refClusterStats(emb: DataFrame, iters: Int): DataFrame =
+    VectorOps.cellRanks(emb, refSqrtCells(emb, iters), "vec_id")
+      .filter(col("cell_rank") === 1)
+      .groupBy(col("c_label"))
+      .agg(count(lit(1)).as("n_vecs"),
+        sum(round(col("cdist") * 1e6).cast("long")).as("inertia6"))
+      .select(col("c_label"), col("n_vecs"),
+        roundn(col("inertia6").cast("double") / 1e6, 6).as("inertia"))
+
+  /** Vectors 0 and 1 are equal, so seed 1 ties seed 0 everywhere and
+    * loses every member; vector 3 is equidistant from seeds 0 and 2,
+    * and vector 4 is too after 6dp rounding. */
+  private val tieVecs: Seq[Seq[Float]] = Seq(
+    Seq(0f, 0f, 0f), Seq(0f, 0f, 0f), Seq(2f, 0f, 0f), Seq(1f, 0f, 0f), Seq(1.0000001f, 0f, 0f))
+
+  /** [[tieVecs]], then a null (5) and an empty (6) embedding, both
+    * seeds at k ≥ 7; 7–9 are ragged (2, 4 and 5 dims); then 30 seeded
+    * random vectors of 3 or 4 dims. The rows sit in 3 partitions in a
+    * shuffled order. */
+  private lazy val parityEmb: DataFrame = {
+    val rnd = new scala.util.Random(8080)
+    val fixed = tieVecs ++ Seq(null, Seq.empty, Seq(5f, 5f), Seq(5f, 5f, 5f, 5f),
+      Seq(4.9f, 5.1f, 5f, 5.2f, 1f))
+    val random = Seq.fill(30)(Seq.fill(3 + rnd.nextInt(2))(rnd.nextInt(60) / 10f))
+    val rows = (fixed ++ random).zipWithIndex.map { case (e, i) => (i.toLong, e, i % 3) }
+    spark.sparkContext.parallelize(rnd.shuffle(rows), 3).toDF("vec_id", "embedding", "label")
+  }
+
+  for (iters <- Seq(0, 1, 3)) {
+    test(s"map-side Lloyd equals the exploded DataFrame Lloyd row for row (iters $iters)") {
+      for (k <- Seq(3, 10))
+        assertSameRows(VectorOps.kmeansCells(parityEmb, k, iters),
+          refKmeansCells(parityEmb, k, iters))
+      assertSameRows(VectorOps.sqrtCells(parityEmb, iters), refSqrtCells(parityEmb, iters))
+      assertSameRows(VectorOps.kmeansCentroids(parityEmb, iters),
+        refKmeansCentroids(parityEmb, iters))
+      assertSameRows(VectorOps.kmeansClusterStats(parityEmb, iters),
+        refClusterStats(parityEmb, iters))
+    }
+  }
+
+  test("no seed among the vec_ids: no cells and no cluster rows, as before") {
+    val shifted = emb.withColumn("vec_id", col("vec_id") + 100L)
+    assert(VectorOps.kmeansCells(shifted, 3, 2).isEmpty)
+    assertSameRows(VectorOps.kmeansClusterStats(shifted, 2), refClusterStats(shifted, 2))
+    assert(VectorOps.kmeansClusterStats(shifted, 2).isEmpty)
+  }
+
+  test("Lloyd rounds: ties go to the lower c_id and a seed without members drops out") {
+    val tieEmb = tieVecs.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("vec_id", "embedding")
+    val cells = VectorOps.kmeansCells(tieEmb, 3, 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(!cells.keySet.exists(_._1 == 1L), "seed 1 ties seed 0 and must lose every member")
+    // vectors 3 and 4 tie seeds 0 and 2 and join cell 0: its dim-0 mean
+    // is (0 + 0 + 1 + 1.0000001) / 4 over its members 0, 1, 3 and 4
+    assert(cells((0L, 0L)) === round6((1.0 + 1.0000001f) / 4))
+    assert(cells((2L, 0L)) === 2.0)
+  }
+
+  test("round6 equals Spark's round(x, 6) + 0.0 bit for bit") {
+    val rnd = new scala.util.Random(6006)
+    val random = Seq.fill(2000) {
+      val x = rnd.nextDouble() * math.pow(10, rnd.nextInt(14) - 3)
+      if (rnd.nextBoolean()) -x else x
+    }
+    val halfway = Seq(0.0000005, 1.0000005, 2.5e-7, 0.1234565, 123.4567895, 1e9 + 0.0000005,
+      123456789.1234565, 4.0000025e9, 1e15 + 0.5, 9.9999995)
+    val edge = Seq(0.0, -0.0, -0.0000004, -0.0000005, 1e-300, Double.MaxValue, Double.MinPositiveValue,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val xs = random ++ halfway ++ halfway.map(-_) ++ edge
+    val sparkRounded = xs.toDF("x").select(col("x"), roundn(col("x"), 6).as("r")).collect()
+    for (r <- sparkRounded) {
+      val x = r.getDouble(0)
+      assert(java.lang.Double.doubleToLongBits(round6(x)) ===
+        java.lang.Double.doubleToLongBits(r.getDouble(1)), s"round6($x)")
+    }
+  }
+
+  test("nearestCells: rounded distances, ties to the lower id wherever it sits") {
+    val e = Array(1.0, 0.0)
+    // ids out of order: 9 and 4 are both at 1.0, 7 at 1.0 after rounding
+    val ids = Array(9L, 7L, 4L, 2L)
+    val cells = Array(Array(0.0, 0.0), Array(2.0000001, 0.0), Array(2.0, 0.0), Array(5.0))
+    assert(VectorMath.nearestCells(e, ids, cells, 4).toSeq ===
+      Seq((2, 1.0), (1, 1.0), (0, 1.0), (3, 16.0)))
+    assert(VectorMath.nearestCells(e, ids, cells, 1).toSeq === Seq((2, 1.0)))
+  }
+
+  test("lloyd: the seed budget fails past its limit and passes at it") {
+    val seed = (0L until 3L).flatMap(c => (0L until 4L).map(d => (c, d, c * 5.0)))
+      .toDF("c_id", "dim", "cv") // 3 cells × 4 dims
+    val ex = intercept[IllegalArgumentException](VectorOps.lloyd(emb, 1, seed, limit = 5))
+    assert(ex.getMessage.contains("at least 6 (c_id, dim) cells > limit 5"))
+    val cent = VectorOps.lloyd(emb, 1, seed, limit = 12)
+    assert(cent.nonEmpty && cent.map(_._1).toSet.subsetOf(Set(0L, 1L, 2L)))
+  }
+
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; Bus.drain(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("kmeansClusterStats construction: count, seed and one job per Lloyd round") {
+    val dir = java.nio.file.Files.createTempDirectory("kmeans_jobs").toString
+    emb.coalesce(1).write.mode("overwrite").parquet(dir)
+    val onDisk = spark.read.parquet(dir)
+    for (iters <- Seq(0, 1, 3)) {
+      // the count is 2 jobs under AQE (its shuffle stage, then the result)
+      assert(jobsDuring(VectorOps.kmeansClusterStats(onDisk, iters)) === 3 + iters)
+    }
   }
 }
