@@ -61,6 +61,19 @@ object SparkEntry {
     Tables.parquet(s, path)
   }
 
+  /** The residual-IVFADC artifacts the PQ persist queries share: the
+    * coarse codebook (persisted as (c_label, cvec) and collected back),
+    * the residual PQ codebook and the encoded corpus, each trained once
+    * per (corpus, JVM). */
+  private def pqIndex(s: SparkSession, dir: String,
+                      emb: DataFrame): (VectorOps.Codebook, DataFrame, DataFrame) = {
+    val cent = VectorOps.collectCodebook(loadOrCreate(s, "ivfpq_cent", dir)(
+      VectorOps.codebookFrame(s, VectorOps.sqrtCells(emb, iters = 2))))
+    lazy val trained = VectorOps.ivfPqIndex(emb, cent)
+    (cent, loadOrCreate(s, "ivfpq_codebook", dir)(trained._1),
+      loadOrCreate(s, "ivfpq_codes", dir)(trained._2))
+  }
+
   private def knnQuery(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") === 0)
@@ -273,8 +286,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
       val (nProbe, _) = VectorOps.probePolicy(kCells)
-      VectorOps.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe,
-        k = 3, centroids = Some(cent), rerankFactor = 16)
+      VectorOps.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), cent, nProbe = nProbe,
+        k = 3, rerankFactor = 16)
     }),
     // load-or-create on the PQ tier: coarse cells, the residual
     // codebook AND the encoded corpus (m bytes/vector) are ONE shared
@@ -288,11 +301,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (nProbe, _) = VectorOps.probePolicy(
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
+      val (cent, pq, codes) = pqIndex(s, dir, emb)
       VectorOps.ivfPqTopKFromIndex(emb, emb.filter(col("vec_id") < 10),
         nProbe = nProbe, k = 3, cent = cent, pqCodebook = pq, codes = codes,
         rerankFactor = 16)
@@ -308,13 +317,9 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (nProbe, _) = VectorOps.probePolicy(
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
-      VectorOps.ivfPqRecallCurve(emb, k = 3, nProbe = nProbe,
-        centroids = Some(cent), index = Some((pq, codes)))
+      val (cent, pq, codes) = pqIndex(s, dir, emb)
+      VectorOps.ivfPqRecallCurve(emb, cent, k = 3, nProbe = nProbe,
+        index = Some((pq, codes)))
     }),
     // the distortion the trained codebook SHIPS with (Jégou's
     // quantization MSE): per-vector residual reconstruction error
@@ -323,11 +328,7 @@ object SparkEntry {
     // retrains from scratch
     "ann_pq_distortion" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cent = loadOrCreate(s, "ivfpq_cent", dir)(
-        VectorOps.sqrtCellsWithK(emb, iters = 2)._2)
-      lazy val trained = VectorOps.ivfPqIndex(emb, cent)
-      val pq = loadOrCreate(s, "ivfpq_codebook", dir)(trained._1)
-      val codes = loadOrCreate(s, "ivfpq_codes", dir)(trained._2)
+      val (cent, pq, codes) = pqIndex(s, dir, emb)
       VectorOps.ivfPqDistortion(emb, cent, pq, codes)
     }),
     // diagonal-Mahalanobis mislabel screen: per-label centroid +
@@ -345,8 +346,10 @@ object SparkEntry {
       VectorOps.pcaProject(Tables.embeddings(s, dir))),
     // semantic decontamination: nearest benchmark vector per corpus
     // vector via IVF co-residency, flagged over tau
-    "decontaminate_semantic" -> ((s, dir) =>
-      VectorOps.decontaminateSemantic(Tables.embeddings(s, dir))),
+    "decontaminate_semantic" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      VectorOps.decontaminateSemantic(emb, VectorOps.sqrtCells(emb, iters = 2))
+    }),
     // power-of-two sequence bucketing with the padding-waste audit
     "length_buckets" -> ((s, dir) => TextOps.lengthBuckets(Tables.documents(s, dir))),
     // JL projection: deterministic ±1 hyperplanes as a literal matrix
@@ -366,8 +369,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-      VectorOps.ivfQuantizedTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe,
-        k = 3, centroids = Some(cent), nAssign = nAssign)
+      VectorOps.ivfQuantizedTopK(emb, emb.filter(col("vec_id") < 10), cent, nProbe = nProbe,
+        k = 3, nAssign = nAssign)
     }),
     // quantizer = ceil(sqrt(N)) k-means cells (NOT the 10 label
     // centroids: at fixed cell count candidate pairs grow ~N² — the
@@ -376,8 +379,7 @@ object SparkEntry {
     // recall.
     "similarity_join" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.similarityJoinIvf(emb, threshold = 0.3,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.similarityJoinIvf(emb, VectorOps.sqrtCells(emb, iters = 2), threshold = 0.3)
     }),
     // farthest-first k-center coreset: 6 selections, far_dist = the
     // coverage radius curve; one map pass + one argmax per round
@@ -387,15 +389,13 @@ object SparkEntry {
     // lrd, LOF = neighbor-density ratio; top-20
     "lof_outliers" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.lofOutliers(emb,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.lofOutliers(emb, VectorOps.sqrtCells(emb, iters = 2))
     }),
     // SemDeDup selection: cluster-scoped near-dup pairs → keep/prune
     // verdict per vector (smaller-id representative survives)
     "semantic_dedup" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.semanticDedupKeep(emb, threshold = 0.3,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.semanticDedupKeep(emb, VectorOps.sqrtCells(emb, iters = 2), threshold = 0.3)
     }),
 
     // ---- P2: keywords + prompt (SURVEY.md §2.5, §3.3) ----
@@ -635,8 +635,7 @@ object SparkEntry {
     // scored once at the loosest theta, per-point prune/keep census
     "semdedup_curve" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.semdedupCurve(emb,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.semdedupCurve(emb, VectorOps.sqrtCells(emb, iters = 2))
     }),
     // tokenizer training: first 6 BPE merges by frequency-weighted
     // pair counting + greedy string-space merge (Sennrich ACL'16)
@@ -990,16 +989,14 @@ object SparkEntry {
     // with a DIFFERENT label (IVF cells bound the pair join)
     "hard_negatives" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.hardNegatives(emb,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.hardNegatives(emb, VectorOps.sqrtCells(emb, iters = 2))
     }),
     // full contrastive triplets: hardest same-label positive AND
     // hardest cross-label negative from ONE scored candidate pass,
     // plus the margin the triplet loss is asked to widen
     "triplet_mining" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      VectorOps.tripletMining(emb,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+      VectorOps.tripletMining(emb, VectorOps.sqrtCells(emb, iters = 2))
     }),
     // the contrastive dataset capstone (r14 verdict #6): ICT (query,
     // positive) + lexical hard negatives + dense hardest pos/neg per
@@ -1008,7 +1005,7 @@ object SparkEntry {
     "retrieval_training_set" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       SearchOps.retrievalTrainingSet(Tables.documents(s, dir), emb,
-        centroids = Some(VectorOps.sqrtCells(emb, iters = 2)))
+        VectorOps.sqrtCells(emb, iters = 2))
     }),
     "lang_id" -> ((s, dir) => TextOps.langId(Tables.documents(s, dir))),
     // LEARNED lang-id: hashed char-trigram Naive Bayes trained
@@ -1389,8 +1386,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-      VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe, k = 3,
-        centroids = Some(cent), nAssign = nAssign)
+      VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), cent, nProbe = nProbe, k = 3,
+        nAssign = nAssign)
     }),
     // load-or-create for the vector tier: the trained codebook
     // persists to parquet and a reloaded codebook must answer the
@@ -1403,10 +1400,11 @@ object SparkEntry {
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_ivfidx_" +
         s.sparkContext.applicationId
-      cent.write.mode("overwrite").parquet(tmp)
+      VectorOps.codebookFrame(s, cent).write.mode("overwrite").parquet(tmp)
       cleanupOnExit(tmp)
-      VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), nProbe = nProbe, k = 3,
-        centroids = Some(Tables.parquet(s, tmp)), nAssign = nAssign)
+      VectorOps.ivfTopK(emb, emb.filter(col("vec_id") < 10),
+        VectorOps.collectCodebook(Tables.parquet(s, tmp)), nProbe = nProbe, k = 3,
+        nAssign = nAssign)
     }),
     // incremental ANN ingest (the reference's index.add loop,
     // app_callapi.py:139-148): vectors with vec_id%10 >= 8 arrive as
@@ -1425,15 +1423,14 @@ object SparkEntry {
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_annincr_" +
         s.sparkContext.applicationId
-      cent.write.mode("overwrite").parquet(s"$tmp/cent")
-      VectorOps.cellRanks(base, cent, "vec_id")
-        .filter(col("cell_rank") <= nAssign)
+      VectorOps.codebookFrame(s, cent).write.mode("overwrite").parquet(s"$tmp/cent")
+      VectorOps.cellRanks(base, cent, "vec_id", nAssign)
         .select(col("vec_id"), col("c_label"))
         .write.mode("overwrite").parquet(s"$tmp/assigned")
       cleanupOnExit(tmp)
       VectorOps.ivfIncrementalTopK(emb, emb.filter(col("vec_id") < 10),
         baseAssigned = Tables.parquet(s, s"$tmp/assigned"),
-        cent = Tables.parquet(s, s"$tmp/cent"),
+        cent = VectorOps.collectCodebook(Tables.parquet(s, s"$tmp/cent")),
         batch = batch, nProbe = nProbe, k = 3, nAssign = nAssign)
     }),
     // the re-Lloyd HALF of the incremental-ANN story: when drift
@@ -1456,8 +1453,8 @@ object SparkEntry {
       val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
       val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
       VectorOps.ivfFilteredTopK(emb, col("label") % 2 === 0,
-        emb.filter(col("vec_id") < 10), nProbe = nProbe, k = 3,
-        centroids = Some(cent), nAssign = nAssign)
+        emb.filter(col("vec_id") < 10), cent, nProbe = nProbe, k = 3,
+        nAssign = nAssign)
     }),
     // the recall-vs-nProbe curve as a DECLARED receipt: IVF@{1,2,3}
     // probes vs the exact brute-force twin, both recomputed by the

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object VectorMath {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  import graft.functions.expressions.{CosineSimilarity, DotProduct, L2SqDistance}
+  import graft.functions.expressions.{CosineSimilarity, DotProduct, L2SqDistance, NearestCells}
 
   /** Cast an Array[Float] column to Array[Double] for stable math. */
   def asDouble(v: Column): Column = v.cast("array<double>")
@@ -38,6 +38,12 @@ object VectorMath {
   def fastCosine(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
 
+  /** The `n` cells of the codebook row `cells` (array of (id, centroid)
+    * structs) nearest the vector `e`, nearest first, as an array of
+    * (c_label, cdist) structs: [[nearestCells]] evaluated in the row. */
+  def fastNearestCells(e: Column, cells: Column, n: Int): Column =
+    column(NearestCells(expression(e), expression(cells), n))
+
   // ---- higher-order-function reference forms (oracle-readable) ----
 
   /** Sequential ordered fold of an Array[Double] column: sum. */
@@ -48,9 +54,6 @@ object VectorMath {
     * (FAISS IndexFlatL2 returns *squared* L2 — reference app.py:180.) */
   def l2Sq(a: Column, b: Column): Column =
     foldSum(zip_with(a, b, (x, y) => (x - y) * (x - y)))
-
-  /** L2 distance (sqrt of [[l2Sq]]). */
-  def l2(a: Column, b: Column): Column = sqrt(l2Sq(a, b))
 
   /** Dot product of two Array[Double] columns. */
   def dot(a: Column, b: Column): Column =
@@ -123,12 +126,18 @@ object VectorMath {
       d(c) = round6(s)
       c += 1
     }
+    nearestOf(d, ids, n).map(c => (c, d(c)))
+  }
+
+  /** Indices of the `n` smallest rounded distances `d`, smallest first;
+    * equal distances go to the lower id and NaN sorts last. */
+  def nearestOf(d: Array[Double], ids: Array[Long], n: Int): Array[Int] = {
     // n argmin passes: n is 1 or a small nAssign, so this beats a sort
-    val taken = new Array[Boolean](cells.length)
-    Array.fill(math.min(n, cells.length)) {
+    val taken = new Array[Boolean](d.length)
+    Array.fill(math.min(n, d.length)) {
       var best = -1
       var c = 0
-      while (c < cells.length) {
+      while (c < d.length) {
         if (!taken(c) && (best < 0 || {
           val o = java.lang.Double.compare(d(c), d(best))
           o < 0 || (o == 0 && ids(c) < ids(best))
@@ -136,7 +145,7 @@ object VectorMath {
         c += 1
       }
       taken(best) = true
-      (best, d(best))
+      best
     }
   }
 }

@@ -1,8 +1,9 @@
 package graft.functions.expressions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for dense-vector math — the
@@ -36,15 +37,8 @@ trait VectorFoldExpression extends BinaryExpression with ImplicitCastInputTypes 
 case class L2SqDistance(left: Expression, right: Expression) extends VectorFoldExpression {
   override def prettyName: String = "graft_l2sq"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { val d = x.getDouble(i) - y.getDouble(i); s += d * d; i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2SqDistance.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -62,6 +56,51 @@ case class L2SqDistance(left: Expression, right: Expression) extends VectorFoldE
          |${ev.value} = $s;
        """.stripMargin
     })
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object L2SqDistance {
+  /** The interpreted fold: squared differences over the common prefix,
+    * in ascending index order. */
+  def fold(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { val d = x.getDouble(i) - y.getDouble(i); s += d * d; i += 1 }
+    s
+  }
+}
+
+/** The `n` codebook cells nearest a vector, nearest first: `right` is
+  * one codebook row, an array of (id, centroid) structs, and the result
+  * is an array of (c_label, cdist) structs. Every cell is scored with
+  * `roundn(fastL2Sq(e, centroid), 6)` and ranked by (cdist, c_label) —
+  * [[graft.functions.VectorMath.nearestOf]], the argmin of the Lloyd
+  * rounds and the stream. A null vector scores every cell null, so its
+  * cells rank by id alone (nulls first, as a SQL sort puts them). */
+case class NearestCells(left: Expression, right: Expression, n: Int)
+    extends BinaryExpression with CodegenFallback {
+  override def prettyName: String = "graft_nearest_cells"
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("c_label", LongType, nullable = false),
+    StructField("cdist", DoubleType))), containsNull = false)
+
+  override def nullable: Boolean = right.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val book = right.eval(input).asInstanceOf[ArrayData]
+    if (book == null) return null
+    val e = left.eval(input).asInstanceOf[ArrayData]
+    val ids = Array.tabulate(book.numElements())(c => book.getStruct(c, 2).getLong(0))
+    val d = Array.tabulate(ids.length)(c =>
+      if (e == null) 0.0
+      else graft.functions.VectorMath.round6(L2SqDistance.fold(e, book.getStruct(c, 2).getArray(1))))
+    new GenericArrayData(graft.functions.VectorMath.nearestOf(d, ids, n).map(c =>
+      InternalRow(ids(c), if (e == null) null else d(c)): Any))
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

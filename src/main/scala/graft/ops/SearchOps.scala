@@ -243,8 +243,8 @@ object SearchOps {
     * postings-pruned scoring; triplets = cell-bounded pair join);
     * the composition adds only probe-bounded joins on anchor_id and
     * 1-row agg crossJoins. */
-  def retrievalTrainingSet(docs: DataFrame, emb: DataFrame, nAnchors: Long = 10,
-                           centroids: Option[DataFrame] = None): DataFrame = {
+  def retrievalTrainingSet(docs: DataFrame, emb: DataFrame, cells: VectorOps.Codebook,
+                           nAnchors: Long = 10): DataFrame = {
     // the three mining legs are independent job chains over different
     // substrates (token windows / BM25 postings / embedding cells) —
     // materialize them as parallel Legs so their jobs overlap; EAGER
@@ -258,7 +258,7 @@ object SearchOps {
       () => bm25HardNegatives(docs, nQueries = nAnchors)
         .select(col("query_doc").as("anchor_id"), col("neg_id"))
         .localCheckpoint(true),
-      () => VectorOps.tripletMining(emb, centroids = centroids)
+      () => VectorOps.tripletMining(emb, cells)
         .filter(col("anchor_id") < nAnchors)
         .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("margin"))
         .localCheckpoint(true))

@@ -21,6 +21,11 @@ import graft.functions.VectorMath._
   */
 object VectorOps {
 
+  /** An IVF codebook: (c_label, centroid) pairs in ascending c_label,
+    * held on the driver. [[lloyd]] trains it, and [[MaxCentroidCells]]
+    * bounds its size. */
+  type Codebook = Seq[(Long, Array[Double])]
+
   /** J3+W1+J1 — exact KNN: top-k nearest corpus vectors to the single
     * query row in `query` (column `qe`: Array[Double]), with rank,
     * squared-L2 (FAISS contract, app.py:180) and cosine re-score
@@ -102,26 +107,29 @@ object VectorOps {
     * in the same sense as [[ivfTopK]] (a pair split across disjoint
     * cell sets is unseen) — multi-assignment attacks exactly that
     * boundary loss mode. */
-  def similarityJoinIvf(embeddings: DataFrame, threshold: Double, nAssign: Int = 2,
-                        centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
-    val cand = assigned.select(col("id").as("a_id"), col("c_label"))
-      .join(assigned.select(col("id").as("b_id"), col("c_label")), "c_label")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
-      .distinct() // a pair can share several cells
+  def similarityJoinIvf(embeddings: DataFrame, cells: Codebook, threshold: Double,
+                        nAssign: Int = 2): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    cand
+    coResidents(embeddings, cells, nAssign, "a_id", "b_id", directed = false)
       .join(e.select(col("vec_id").as("a_id"), col("e").as("ea")), "a_id")
       .join(e.select(col("vec_id").as("b_id"), col("e").as("eb")), "b_id")
       .withColumn("cos_sim", roundn(fastCosine(col("ea"), col("eb")), 6))
       .filter(col("cos_sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
+  }
+
+  /** The candidate pairs of the cell co-residency join: every vector
+    * sits in its `nAssign` nearest cells, and two vectors pair when they
+    * share one. Output (a, b), distinct (a pair can share several
+    * cells): a < b, or a ≠ b when `directed`. */
+  private def coResidents(embeddings: DataFrame, cells: Codebook, nAssign: Int,
+                          a: String, b: String, directed: Boolean): DataFrame = {
+    val assigned = cellRanks(embeddings, cells, "id", nAssign).select(col("id"), col("c_label"))
+    assigned.select(col("id").as(a), col("c_label"))
+      .join(assigned.select(col("id").as(b), col("c_label")), "c_label")
+      .filter(if (directed) col(a) =!= col(b) else col(a) < col(b))
+      .select(col(a), col(b))
+      .distinct()
   }
 
   /** SemDeDup-style selection (Abbas et al., arXiv 2303.09540):
@@ -135,9 +143,9 @@ object VectorOps {
     * representative is SemDeDup's deterministic tie-break; chains
     * don't matter — any vector with a smaller similar neighbor is
     * pruned whether or not that neighbor survives. */
-  def semanticDedupKeep(embeddings: DataFrame, threshold: Double = 0.3,
-                        centroids: Option[DataFrame] = None): DataFrame = {
-    val pruned = similarityJoinIvf(embeddings, threshold, centroids = centroids)
+  def semanticDedupKeep(embeddings: DataFrame, cells: Codebook,
+                        threshold: Double = 0.3): DataFrame = {
+    val pruned = similarityJoinIvf(embeddings, cells, threshold)
       .groupBy(col("b_id").as("vec_id"))
       .agg(min(col("a_id")).as("pruned_by"), max(col("cos_sim")).as("max_cos"))
     embeddings.select(col("vec_id"))
@@ -160,11 +168,10 @@ object VectorOps {
     * `chosen` marks the smallest θ keeping ≥ `keepTarget` of the
     * corpus ([[graft.ops.DedupOps.withChosenThreshold]]'s shared
     * rule — most aggressive prune inside the keep budget). */
-  def semdedupCurve(embeddings: DataFrame,
+  def semdedupCurve(embeddings: DataFrame, cells: Codebook,
                     thresholds: Seq[Double] = Seq(0.2, 0.3, 0.5),
-                    centroids: Option[DataFrame] = None,
                     keepTarget: Double = 0.8): DataFrame = {
-    val scored = similarityJoinIvf(embeddings, thresholds.min, centroids = centroids)
+    val scored = similarityJoinIvf(embeddings, cells, thresholds.min)
       .localCheckpoint(false)
     val n = embeddings.agg(count(lit(1)).as("n_vecs"))
     val curve = thresholds.map { t =>
@@ -198,20 +205,9 @@ object VectorOps {
     * Determinism: rank on the ROUNDED cosine with a vec_id tie-break.
     * Scale shape: cells bound the pair blowup, the rank window keys
     * on the uniform anchor id, nothing driver-side. */
-  def hardNegatives(embeddings: DataFrame, nAssign: Int = 2,
-                    centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+  def hardNegatives(embeddings: DataFrame, cells: Codebook, nAssign: Int = 2): DataFrame = {
     val lab = embeddings.select(col("vec_id"), col("label"))
-    val cand = assigned.select(col("id").as("anchor_id"), col("c_label"))
-      .join(assigned.select(col("id").as("neg_id"), col("c_label")), "c_label")
-      .filter(col("anchor_id") =!= col("neg_id"))
-      .select(col("anchor_id"), col("neg_id"))
-      .distinct() // a pair can share several cells
+    val cand = coResidents(embeddings, cells, nAssign, "anchor_id", "neg_id", directed = true)
       .join(lab.select(col("vec_id").as("anchor_id"), col("label").as("anchor_label")), "anchor_id")
       .join(lab.select(col("vec_id").as("neg_id"), col("label").as("neg_label")), "neg_id")
       .filter(col("anchor_label") =!= col("neg_label"))
@@ -240,21 +236,10 @@ object VectorOps {
     * partitions) — mining the positive is not a second scan. Margin
     * is a difference of two on-grid values (exact), re-rounded only
     * to normalize the −0.0 corner. */
-  def tripletMining(embeddings: DataFrame, nAssign: Int = 2,
-                    centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+  def tripletMining(embeddings: DataFrame, cells: Codebook, nAssign: Int = 2): DataFrame = {
     val lab = embeddings.select(col("vec_id"), col("label"))
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val scored = assigned.select(col("id").as("anchor_id"), col("c_label"))
-      .join(assigned.select(col("id").as("other_id"), col("c_label")), "c_label")
-      .filter(col("anchor_id") =!= col("other_id"))
-      .select(col("anchor_id"), col("other_id"))
-      .distinct() // a pair can share several cells
+    val scored = coResidents(embeddings, cells, nAssign, "anchor_id", "other_id", directed = true)
       .join(lab.select(col("vec_id").as("anchor_id"), col("label").as("anchor_label")),
         "anchor_id")
       .join(lab.select(col("vec_id").as("other_id"), col("label").as("other_label")),
@@ -293,13 +278,9 @@ object VectorOps {
     * against benchmark vectors in its cells, never all of them),
     * exact cosine on the candidate sliver, per-corpus-vector argmax
     * window bounded by cell occupancy. */
-  def decontaminateSemantic(embeddings: DataFrame, nBench: Long = 50,
-                            tau: Double = 0.35, nAssign: Int = 2,
-                            centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(sqrtCells(embeddings, iters = 2))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+  def decontaminateSemantic(embeddings: DataFrame, cells: Codebook, nBench: Long = 50,
+                            tau: Double = 0.35, nAssign: Int = 2): DataFrame = {
+    val assigned = cellRanks(embeddings, cells, "id", nAssign).select(col("id"), col("c_label"))
     val cand = assigned.filter(col("id") >= nBench)
       .select(col("id").as("corpus_id"), col("c_label"))
       .join(assigned.filter(col("id") < nBench)
@@ -449,17 +430,12 @@ object VectorOps {
     * funnel reads: cell index (√N rows, broadcast) → code table
     * (N·d bytes, 4× smaller than float32) → float table (random
     * access, k·rerankFactor rows per query). */
-  def ivfQuantizedTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
-                       centroids: Option[DataFrame] = None, nAssign: Int = 1,
+  def ivfQuantizedTopK(corpus: DataFrame, queries: DataFrame, cells: Codebook,
+                       nProbe: Int, k: Int, nAssign: Int = 1,
                        rerankFactor: Int = 4): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(corpus)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
+    val assigned = cellRanks(corpus, cells, "vec_id", nAssign)
       .select(col("vec_id"), col("c_label"))
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
+    val probes = cellRanks(queries, cells, "query_id", nProbe)
       .select(col("query_id"), col("c_label"))
     val candidates = probes.join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
@@ -554,7 +530,7 @@ object VectorOps {
     * cells and carry a PER-CELL lookup table (q − c_cell residual vs
     * the shared residual codebooks).
     *
-    * Scale shape: coarse cells broadcast (√N·d rows); residuals are
+    * Scale shape: the coarse codebook broadcasts (√N rows); residuals are
     * map-side zip_with over the scan; PQ training runs on the
     * residual subvector stream exactly like [[pqTopK]] (at 100 TB:
     * train on a sample, encode the full corpus with the broadcast
@@ -562,12 +538,10 @@ object VectorOps {
     * doubles — broadcast; candidate scan is the IVF equi-join with a
     * map-side m-term fold per row, floats touched only in the rerank.
     */
-  private def ivfPqCandidates(corpus: DataFrame, queries: DataFrame, nProbe: Int,
-                              centroids: Option[DataFrame],
-                              m: Int, ksub: Int, iters: Int): DataFrame = {
-    val cent = centroids.getOrElse(sqrtCells(corpus, iters = 2)).localCheckpoint(false)
-    val (pqCodebook, codes) = ivfPqIndex(corpus, cent, m, ksub, iters)
-    ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m, ksub)
+  private def ivfPqCandidates(corpus: DataFrame, queries: DataFrame, cells: Codebook,
+                              nProbe: Int, m: Int, ksub: Int, iters: Int): DataFrame = {
+    val (pqCodebook, codes) = ivfPqIndex(corpus, cells, m, ksub, iters)
+    ivfPqCandidatesFromIndex(queries, nProbe, cells, pqCodebook, codes, m, ksub)
   }
 
   /** The residual-IVFADC INDEX as tables — the TRAIN half (the
@@ -582,30 +556,25 @@ object VectorOps {
     * ann_ivf_pq oracle).
     *
     * Training is the [[pqTopK]] relational-Lloyd pipeline on the
-    * RESIDUAL stream: primary-cell assignment broadcast-joins the
-    * cells, residuals are map-side zip_with, seeds = the first ksub
-    * vectors' residual subvectors, `iters` assign/update rounds. */
-  def ivfPqIndex(corpus: DataFrame, cent: DataFrame,
+    * RESIDUAL stream: [[cellRanks]] assigns each vector its primary
+    * cell, the residual is a map-side zip_with against the broadcast
+    * `cent` codebook, seeds = the first ksub vectors' residual
+    * subvectors, `iters` assign/update rounds. */
+  def ivfPqIndex(corpus: DataFrame, cent: Codebook,
                  m: Int = 8, ksub: Int = 16, iters: Int = 2): (DataFrame, DataFrame) = {
     val d = corpus.select(size(col("embedding"))).head().getInt(0)
     require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
     requireDenseSeedIds(corpus, ksub, "ivfPqIndex")
     val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
 
     // primary-cell assignment + map-side residual (raw double − the
     // once-rounded centroid component, the oracle's d.x − c.cv)
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= 1)
-      .select(col("vec_id"), col("c_label"))
+    val assigned = cellRanks(corpus, cent, "vec_id", 1).select(col("vec_id"), col("c_label"))
     val res = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .join(assigned, "vec_id")
-      .join(broadcast(centDense), "c_label")
+      .join(broadcast(codebookFrame(corpus.sparkSession, cent)), "c_label")
       .select(col("vec_id"), col("c_label"),
-        zip_with(col("e"), col("ccvec"), (x, c) => x - c).as("r"))
+        zip_with(col("e"), col("cvec"), (x, c) => x - c).as("r"))
 
     // residual subvector view + PQ training — the pqTopK pipeline on
     // the residual stream (seeds = first ksub vectors' residuals).
@@ -687,24 +656,19 @@ object VectorOps {
     * broadcast MAP), then the ADC scan — the IVF equi-join prunes
     * rows and a map-side m-term fold in subspace order prices each
     * survivor (the oracle's sum(pd ORDER BY s)). */
-  def ivfPqCandidatesFromIndex(queries: DataFrame, nProbe: Int, cent: DataFrame,
+  def ivfPqCandidatesFromIndex(queries: DataFrame, nProbe: Int, cent: Codebook,
                                pqCodebook: DataFrame, codes: DataFrame,
                                m: Int = 8, ksub: Int = 16): DataFrame = {
     val d = queries.select(size(col("embedding"))).head().getInt(0)
     require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
     val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
+    val probes = cellRanks(queries, cent, "query_id", nProbe)
       .select(col("query_id"), col("c_label"))
     val qres = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
       .join(probes, "query_id")
-      .join(broadcast(centDense), "c_label")
+      .join(broadcast(codebookFrame(queries.sparkSession, cent)), "c_label")
       .select(col("query_id"), col("c_label"),
-        zip_with(col("qe"), col("ccvec"), (x, c) => x - c).as("r"))
+        zip_with(col("qe"), col("cvec"), (x, c) => x - c).as("r"))
     val lut = pqSubvecs(qres, Seq("query_id", "c_label"), "r", m, dsub)
       .join(broadcast(pqCodebook), "s")
       .withColumn("pd", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
@@ -737,21 +701,17 @@ object VectorOps {
     * codebook join keyed (s, code), one vec-keyed 8-term ordered
     * fold; the census windows run over ≤|distinct micro values|
     * rows, never the corpus. */
-  def ivfPqDistortion(corpus: DataFrame, cent: DataFrame,
+  def ivfPqDistortion(corpus: DataFrame, cent: Codebook,
                       pqCodebook: DataFrame, codes: DataFrame,
                       m: Int = 8, ksub: Int = 16): DataFrame = {
     val d = corpus.select(size(col("embedding"))).head().getInt(0)
     require(d % m == 0, s"dims $d not divisible by m=$m subspaces")
     val dsub = d / m
-    val centDense = cent
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("ccvec"))
     val res = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
       .join(codes.select(col("vec_id"), col("c_label"), col("carr")), "vec_id")
-      .join(broadcast(centDense), "c_label")
+      .join(broadcast(codebookFrame(corpus.sparkSession, cent)), "c_label")
       .select(col("vec_id"), col("carr"),
-        zip_with(col("e"), col("ccvec"), (x, c) => x - c).as("r"))
+        zip_with(col("e"), col("cvec"), (x, c) => x - c).as("r"))
     val pv = pqSubvecs(res, Seq("vec_id", "carr"), "r", m, dsub)
       .withColumn("code", element_at(col("carr"), (col("s") + 1).cast("int")))
       .join(broadcast(pqCodebook), Seq("s", "code"))
@@ -782,7 +742,7 @@ object VectorOps {
     * half of load-or-create on the PQ tier; must reproduce the
     * in-session [[ivfPqTopK]] answer bit-for-bit (shared oracle). */
   def ivfPqTopKFromIndex(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
-                         cent: DataFrame, pqCodebook: DataFrame, codes: DataFrame,
+                         cent: Codebook, pqCodebook: DataFrame, codes: DataFrame,
                          m: Int = 8, ksub: Int = 16,
                          rerankFactor: Int = 4): DataFrame = {
     val cand = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes, m, ksub)
@@ -792,11 +752,10 @@ object VectorOps {
   /** Residual IVFADC top-k — see [[ivfPqCandidates]] for the funnel;
     * this applies the k·rerankFactor ADC budget and the exact-cosine
     * rerank ([[exactCosRerank]], floats only on survivors). */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
-                centroids: Option[DataFrame] = None,
+  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, cells: Codebook, nProbe: Int, k: Int,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
                 rerankFactor: Int = 4): DataFrame = {
-    val cand = ivfPqCandidates(corpus, queries, nProbe, centroids, m, ksub, iters)
+    val cand = ivfPqCandidates(corpus, queries, cells, nProbe, m, ksub, iters)
     exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
@@ -805,10 +764,9 @@ object VectorOps {
     * [[sq8RecallCurve]] shape: candidates rank ONCE at the largest
     * budget, each curve point is a qrank filter + re-rank over the
     * same checkpointed table; method 'ivfpq', param = factor). */
-  def ivfPqRecallCurve(corpus: DataFrame, k: Int = 3,
+  def ivfPqRecallCurve(corpus: DataFrame, cells: Codebook, k: Int = 3,
                        factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10,
                        nProbe: Int = 3,
-                       centroids: Option[DataFrame] = None,
                        index: Option[(DataFrame, DataFrame)] = None,
                        groundTruth: Option[DataFrame] = None,
                        m: Int = 8, ksub: Int = 16): DataFrame = {
@@ -819,7 +777,6 @@ object VectorOps {
     val maxF = factors.max
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val cent = centroids.getOrElse(sqrtCells(corpus, iters = 2)).localCheckpoint(false)
     // the receipt measures the FAMILY's index — consumers may hand in
     // the shared persisted artifacts (the lang_confusion_learned
     // amortization; the oracle retrains from scratch, so a stale
@@ -829,8 +786,8 @@ object VectorOps {
     // LUT keys, never the defaults (r14 ADVICE: hardcoded 8/16 here
     // would silently mis-key a differently-shaped index)
     val (pqCodebook, codes) = index.getOrElse(
-      ivfPqIndex(corpus, cent, m = m, ksub = ksub, iters = 2))
-    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cent, pqCodebook, codes,
+      ivfPqIndex(corpus, cells, m = m, ksub = ksub, iters = 2))
+    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cells, pqCodebook, codes,
       m = m, ksub = ksub)
     val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
         lit(k * maxF), "qrank")
@@ -906,31 +863,14 @@ object VectorOps {
       roundn(array_max(col("embedding")).cast("double"), 6).as("v_max"),
       size(col("embedding")).cast("long").as("n_dims"))
 
-  /** Lloyd-refined label centroids: seeded from [[meanPoolByLabel]]
-    * (c_id = label), then `iters` [[lloyd]] rounds. Output: the local
-    * (c_id, dim, cv) table. Deterministic: distances rounded before the
-    * argmin, ties on centroid id. */
-  def kmeansCentroids(embeddings: DataFrame, iters: Int): DataFrame =
-    cellTable(embeddings.sparkSession, lloyd(embeddings, iters,
-      meanPoolByLabel(embeddings)
-        .select(col("label").cast("long").as("c_id"), col("dim"),
-          col("centroid_val").as("cv"))))
-
   /** K-means cells for IVF at a chosen cell count — the √N-cells
     * policy the quantizer needs when labels are absent or too coarse
     * (10 label cells ≈ nothing at 100 TB; cells should track √N).
     * Seeding is deterministic and oracle-replicable: the first `k`
-    * vectors by vec_id are the initial centroids (c_id = vec_id),
-    * refined by `iters` Lloyd rounds. Output shape matches ivfTopK's
-    * `centroids` parameter: (c_label, dim, cv). */
-  def kmeansCells(embeddings: DataFrame, k: Int, iters: Int): DataFrame =
-    cellTable(embeddings.sparkSession, kmeansCellsDense(embeddings, k, iters))
-      .select(col("c_id").as("c_label"), col("dim"), col("cv"))
-
-  /** [[kmeansCells]] as the trainer returns it: dense (c_id, centroid)
-    * pairs in ascending c_id. */
-  private def kmeansCellsDense(embeddings: DataFrame, k: Int,
-                               iters: Int): Seq[(Long, Array[Double])] = {
+    * vectors by vec_id are the initial centroids (c_label = vec_id),
+    * refined by `iters` Lloyd rounds. Returns the [[Codebook]] every
+    * IVF op takes. */
+  def kmeansCells(embeddings: DataFrame, k: Int, iters: Int): Codebook = {
     val seeds = embeddings
       .filter(col("vec_id") < k)
       .select(col("vec_id").as("c_id"),
@@ -947,13 +887,13 @@ object VectorOps {
     * action (`count()`) happens at query BUILD time and is the
     * documented price of a data-dependent plan; the oracle mirrors it
     * with `(SELECT ceil(sqrt(count(*))) FROM embeddings)`. */
-  def sqrtCells(embeddings: DataFrame, iters: Int): DataFrame =
+  def sqrtCells(embeddings: DataFrame, iters: Int): Codebook =
     sqrtCellsWithK(embeddings, iters)._2
 
   /** [[sqrtCells]] exposing the derived cell count too, so callers can
     * derive the probe budget from it ([[probePolicy]]) without a
     * second eager `count()`. */
-  def sqrtCellsWithK(embeddings: DataFrame, iters: Int): (Int, DataFrame) = {
+  def sqrtCellsWithK(embeddings: DataFrame, iters: Int): (Int, Codebook) = {
     val k = sqrtK(embeddings)
     (k, kmeansCells(embeddings, k, iters))
   }
@@ -961,13 +901,19 @@ object VectorOps {
   private def sqrtK(embeddings: DataFrame): Int =
     math.ceil(math.sqrt(embeddings.count().toDouble)).toInt
 
-  /** Dense centroids as the local (c_id, dim, cv) table the callers
-    * join and the oracle mirrors. */
-  private def cellTable(spark: SparkSession, cent: Seq[(Long, Array[Double])]): DataFrame = {
+  /** A codebook as a (c_label, cvec) table: the form it persists in
+    * and the broadcast side of the IVFADC residual joins. */
+  def codebookFrame(spark: SparkSession, cells: Codebook): DataFrame = {
     import spark.implicits._
-    cent.flatMap { case (id, arr) =>
-      arr.zipWithIndex.map { case (v, d) => (id, d.toLong, v) }
-    }.toDF("c_id", "dim", "cv")
+    cells.map { case (id, v) => (id, v.toSeq) }.toDF("c_label", "cvec")
+  }
+
+  /** A (c_label, cvec) table collected back into a [[Codebook]]. A
+    * double array survives the parquet round trip bit for bit. */
+  def collectCodebook(df: DataFrame): Codebook = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("c_label"), col("cvec")).as[(Long, Array[Double])].collect().toSeq.sortBy(_._1)
   }
 
   /** Codebook REFRESH receipt — the re-Lloyd that [[ivfIncrementalTopK]]'s
@@ -988,9 +934,9 @@ object VectorOps {
     val base = emb.filter(col("vec_id") % 10 < 8)
     val oldCent = sqrtCells(base, iters = 2)
     val newCent = sqrtCells(emb, iters = 2)
-    val oldA = cellRanks(emb, oldCent, "vec_id").filter(col("cell_rank") === 1)
+    val oldA = cellRanks(emb, oldCent, "vec_id", 1)
       .select(col("vec_id"), col("c_label").as("old_cell"))
-    val newA = cellRanks(emb, newCent, "vec_id").filter(col("cell_rank") === 1)
+    val newA = cellRanks(emb, newCent, "vec_id", 1)
       .select(col("vec_id"), col("c_label").as("new_cell"))
     oldA.join(newA, "vec_id")
       .groupBy(col("old_cell"), col("new_cell"))
@@ -1092,7 +1038,7 @@ object VectorOps {
     * dims are fixed, so the seed's cell count is the loop's, and an
     * over-limit seed fails without being collected whole. */
   private[ops] def lloyd(embeddings: DataFrame, iters: Int, seedCent: DataFrame,
-                         limit: Long = MaxCentroidCells): Seq[(Long, Array[Double])] = {
+                         limit: Long = MaxCentroidCells): Codebook = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val seed = seedCent.select(col("c_id"), col("dim"), col("cv"))
@@ -1173,62 +1119,42 @@ object VectorOps {
     * that exact integer. Empty cells (seeds that lost every member)
     * simply have no row, matching the oracle's GROUP BY.
     *
-    * Scale shape: the dense centroids come straight from [[lloyd]]
-    * and are broadcast as ONE row; each vector's nearest cell is the
-    * minimum of its k (cdist, c_label) structs — map-side, with the
-    * order [[cellRanks]]' window ranks by (a null embedding, whose
-    * distances are all null, goes to the lowest c_label, nulls first).
-    * The only shuffle is the stats agg on the uniform c_label key, with
-    * map-side partials. */
-  def kmeansClusterStats(embeddings: DataFrame, iters: Int = 2): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val cent = kmeansCellsDense(embeddings, sqrtK(embeddings), iters)
-    // no cells, no row: the filter folds into the local table, so a
-    // vector never meets an empty cell list
-    val cells = Seq(cent.map { case (id, v) => (id, v.toSeq) }).toDF("cells")
-      .filter(size(col("cells")) > 0)
-    val nearest = array_min(transform(col("cells"), c => struct(
-      roundn(fastL2Sq(col("e"), c.getField("_2")), 6).as("cdist"),
-      c.getField("_1").as("c_label"))))
-    embeddings.select(asDouble(col("embedding")).as("e"))
-      .crossJoin(broadcast(cells))
-      .select(nearest.as("near"))
-      .groupBy(col("near.c_label").as("c_label"))
+    * Scale shape: [[cellRanks]] at n = 1 — the codebook comes straight
+    * from [[lloyd]] as one broadcast row and each vector's nearest cell
+    * is picked inside its own row. The only shuffle is the stats agg on
+    * the uniform c_label key, with map-side partials. */
+  def kmeansClusterStats(embeddings: DataFrame, iters: Int = 2): DataFrame =
+    cellRanks(embeddings, sqrtCells(embeddings, iters), "vec_id", 1)
+      .groupBy(col("c_label"))
       .agg(count(lit(1)).as("n_vecs"),
-        sum(round(col("near.cdist") * 1e6).cast("long")).as("inertia6"))
+        sum(round(col("cdist") * 1e6).cast("long")).as("inertia6"))
       .select(col("c_label"), col("n_vecs"),
         roundn(col("inertia6").cast("double") / 1e6, 6).as("inertia"))
-  }
 
-  /** Nearest-cells ranking per vector: broadcast the k centroids as
-    * DENSE arrays and evaluate the codegen'd [[fastL2Sq]] kernel over
-    * the map-only N×k cross join — no dim explosion, no aggregation
-    * (a single-row array fold in ascending dim order is bit-equal to
-    * the oracle's `sum((x-cv)^2 ORDER BY dim)` and deterministic by
-    * construction). The only shuffle is the per-id rank window.
-    * Output: (idCol, c_label, cdist, cell_rank). Shared by [[ivfTopK]]
-    * and [[similarityJoinIvf]]. */
-  def cellRanks(df: DataFrame, cent: DataFrame, idCol: String): DataFrame = {
-    // densify the exploded (c_label, dim, cv) interchange form into k
-    // broadcastable rows (c_label, cvec): the per-label collect is
-    // bounded by the dimension count, never by data size
-    val dense = cent.groupBy(col("c_label")).agg(
-      transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
+  /** Each vector's `n` nearest cells of the codebook `cells`:
+    * (idCol, c_label, cdist, cell_rank), cell_rank 1 = nearest. The
+    * codebook broadcasts as ONE local row, and each vector scores all
+    * k cells inside its own row with `roundn(fastL2Sq(e, cvec), 6)` —
+    * a fold in ascending dim order, bit-equal to the oracle's
+    * `sum((x-cv)^2 ORDER BY dim)` — and keeps the first `n` by
+    * (cdist, c_label) ([[fastNearestCells]], the argmin of the Lloyd
+    * rounds). A null embedding scores every cell null, and its cells
+    * rank by c_label. Map-only: no N×k rows, no aggregate, no
+    * shuffle. */
+  def cellRanks(df: DataFrame, cells: Codebook, idCol: String, n: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val book = Seq(cells.map { case (id, v) => (id, v.toSeq) }).toDF("cells")
     df.select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e"))
-      .crossJoin(broadcast(dense))
-      .withColumn("cdist", roundn(fastL2Sq(col("e"), col("cvec")), 6))
-      .withColumn(
-        "cell_rank",
-        row_number().over(
-          Window.partitionBy(col(idCol)).orderBy(col("cdist"), col("c_label"))))
-      .select(col(idCol), col("c_label"), col("cdist"), col("cell_rank"))
+      .crossJoin(broadcast(book))
+      .select(col(idCol),
+        posexplode(fastNearestCells(col("e"), col("cells"), n)).as(Seq("pos", "cell")))
+      .select(col(idCol), col("cell.c_label"), col("cell.cdist"),
+        (col("pos") + 1).as("cell_rank"))
   }
 
   /** IVF-style approximate top-k — the 100 TB scale path for
-    * [[annTopK]]: a coarse quantizer (here: per-label centroids from
-    * [[meanPoolByLabel]] — at scale, the √N [[kmeansCells]] codebook,
+    * [[annTopK]]: a coarse quantizer (the √N [[kmeansCells]] codebook,
     * whose [[lloyd]] rounds are one map-side pass each) assigns every
     * vector to its nearest centroid;
     * a query probes only its `nProbe` nearest cells and runs the exact
@@ -1253,24 +1179,18 @@ object VectorOps {
     * declared query uses k=25 ≈ √N with (2,1); at scale hold k ≈ √N
     * so per-cell candidate lists and the cell index grow together as
     * √N. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, nProbe: Int, k: Int,
-              centroids: Option[DataFrame] = None, nAssign: Int = 1): DataFrame = {
-    // (c_label, dim, cv): rounded per-dimension centroids — label
-    // means by default, or refined cells (e.g. kmeansCentroids
-    // renamed to (c_label, dim, cv)) when supplied
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(corpus)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, cells: Codebook,
+              nProbe: Int, k: Int, nAssign: Int = 1): DataFrame = {
+    // cells: the trained codebook, (c_label, centroid) with every
+    // component rounded once — the cells the oracle replays
     // nAssign > 1 = multi-assignment: each vector lives in its
     // nAssign nearest cells, trading candidate-set size for recall
     // at cell BOUNDARIES — the loss mode more probes alone can't fix
     // cheaply (measured: nAssign=2 at nProbe=2 beats nProbe=4 on
     // candidates scanned per unit recall; see scaladoc table)
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
+    val assigned = cellRanks(corpus, cells, "vec_id", nAssign)
       .select(col("vec_id"), col("c_label"))
-    ivfTopKFromIndex(corpus, queries, assigned, cent, nProbe, k)
+    ivfTopKFromIndex(corpus, queries, assigned, cells, nProbe, k)
   }
 
   /** The probe/score/rank half of [[ivfTopK]] against a PRECOMPUTED
@@ -1283,9 +1203,8 @@ object VectorOps {
     * cell equi-join for candidates (never all-pairs), broadcast
     * 1-row-per-query build side, rank window per query. */
   def ivfTopKFromIndex(corpus: DataFrame, queries: DataFrame, assigned: DataFrame,
-                       cent: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= nProbe)
+                       cent: Codebook, nProbe: Int, k: Int): DataFrame = {
+    val probes = cellRanks(queries, cent, "query_id", nProbe)
       .select(col("query_id"), col("c_label"))
 
     val candidates = probes
@@ -1325,16 +1244,16 @@ object VectorOps {
     *
     * @param baseAssigned the persisted index: (vec_id, c_label) of
     *                     already-ingested vectors
-    * @param cent         the persisted codebook the base was built with
+    * @param cent         the codebook the base was built with, collected
+    *                     back from its persisted (c_label, cvec) table
     * @param batch        newly arriving vectors (vec_id, embedding)
     * @param nAssign      multi-assignment width — must match the
     *                     base's or merged ≠ rebuild */
   def ivfIncrementalTopK(corpus: DataFrame, queries: DataFrame,
-                         baseAssigned: DataFrame, cent: DataFrame,
+                         baseAssigned: DataFrame, cent: Codebook,
                          batch: DataFrame, nProbe: Int, k: Int,
                          nAssign: Int): DataFrame = {
-    val batchAssigned = cellRanks(batch, cent, "vec_id")
-      .filter(col("cell_rank") <= nAssign)
+    val batchAssigned = cellRanks(batch, cent, "vec_id", nAssign)
       .select(col("vec_id"), col("c_label"))
     val merged = baseAssigned.select(col("vec_id"), col("c_label"))
       .unionByName(batchAssigned)
@@ -1358,9 +1277,9 @@ object VectorOps {
     * Cost shape identical to [[ivfTopK]]; the filter rides the
     * corpus scan (predicate pushdown) before assignment. */
   def ivfFilteredTopK(corpus: DataFrame, pred: Column, queries: DataFrame,
-                      nProbe: Int, k: Int, centroids: Option[DataFrame] = None,
+                      cells: Codebook, nProbe: Int, k: Int,
                       nAssign: Int = 1): DataFrame =
-    ivfTopK(corpus.filter(pred), queries, nProbe, k, centroids, nAssign)
+    ivfTopK(corpus.filter(pred), queries, cells, nProbe, k, nAssign)
 
   /** Declared ANN-recall receipt — the recall-vs-nProbe curve as an
     * oracle-pinned query (the way `bpe_vocab_size` pins training
@@ -1395,13 +1314,10 @@ object VectorOps {
     val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
       .select(col("query_id"), col("vec_id")).localCheckpoint(false))
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val cent = sqrtCells(corpus, iters = 2).localCheckpoint(false)
-    val maxP = nProbes.max
-    val assigned = cellRanks(corpus, cent, "vec_id")
-      .filter(col("cell_rank") <= 1)
+    val cent = sqrtCells(corpus, iters = 2)
+    val assigned = cellRanks(corpus, cent, "vec_id", 1)
       .select(col("vec_id"), col("c_label"))
-    val probes = cellRanks(queries, cent, "query_id")
-      .filter(col("cell_rank") <= maxP)
+    val probes = cellRanks(queries, cent, "query_id", nProbes.max)
       .select(col("query_id"), col("c_label"), col("cell_rank"))
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
     val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
@@ -2048,23 +1964,12 @@ object VectorOps {
     * downstream stage (kNN rank, k-distance, reach, lrd, LOF) is a
     * candidate-keyed agg or a k-bounded window partitioned by the
     * uniform point id; top-N = TakeOrderedAndProject. */
-  def lofOutliers(embeddings: DataFrame, k: Int = 5, nAssign: Int = 2,
-                  topN: Int = 20, centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(
-      meanPoolByLabel(embeddings)
-        .select(col("label").as("c_label"), col("dim"), col("centroid_val").as("cv")))
-    val assigned = cellRanks(embeddings, cent, "id")
-      .filter(col("cell_rank") <= nAssign)
-      .select(col("id"), col("c_label"))
+  def lofOutliers(embeddings: DataFrame, cells: Codebook, k: Int = 5, nAssign: Int = 2,
+                  topN: Int = 20): DataFrame = {
     // distances once per UNDIRECTED pair (L2 is symmetric), mirrored
     // after the kernel — halves the fold work on both engines
-    val cand = assigned.select(col("id").as("p_id"), col("c_label"))
-      .join(assigned.select(col("id").as("o_id"), col("c_label")), "c_label")
-      .filter(col("p_id") < col("o_id"))
-      .select(col("p_id"), col("o_id"))
-      .distinct()
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val distU = cand
+    val distU = coResidents(embeddings, cells, nAssign, "p_id", "o_id", directed = false)
       .join(e.select(col("vec_id").as("p_id"), col("e").as("ep")), "p_id")
       .join(e.select(col("vec_id").as("o_id"), col("e").as("eo")), "o_id")
       .select(col("p_id"), col("o_id"),

@@ -1003,9 +1003,9 @@ object StreamingOps {
     * incremental ANN ingest. */
   case class StreamVec(vec_id: Long, embedding: Seq[Float])
 
-  /** One cell assignment — the row the incremental index appends
-    * (the streaming form of `ann_incremental`'s batch-side
-    * `cellRanks` output). */
+  /** One cell assignment — the row the incremental index appends:
+    * one row of [[graft.ops.VectorOps.cellRanks]]' output, which is
+    * what `ann_incremental`'s batch side writes. */
   case class CellAssign(vec_id: Long, c_label: Long, cdist: Double, cell_rank: Int)
 
   /** Output of [[cellCensusStream]]: a cell's current primary
@@ -1013,12 +1013,11 @@ object StreamingOps {
     * schedule the re-Lloyd (SCALE.md's staleness tripwire). */
   case class CellCount(c_label: Long, n_vecs: Long)
 
-  /** Row-local twin of the batch [[graft.ops.VectorOps.cellRanks]]
-    * kernel for ONE vector: [[graft.functions.VectorMath.nearestCells]],
-    * the fold, HALF_UP 6dp rounding and (cdist, c_label) tie order the
-    * batch SQL applies before any rank decision. Spec-pinned bit-equal
-    * to the batch SQL. */
-  def cellRanksJvm(emb: Seq[Float], centroids: Seq[(Long, Array[Double])],
+  /** [[graft.ops.VectorOps.cellRanks]] for ONE vector on the JVM:
+    * [[graft.functions.VectorMath.nearestCells]], the fold, HALF_UP 6dp
+    * rounding and (cdist, c_label) order the batch expression ranks
+    * by. Spec-pinned bit-equal to the batch form. */
+  def cellRanksJvm(emb: Seq[Float], centroids: graft.ops.VectorOps.Codebook,
                    nAssign: Int): Seq[(Long, Double, Int)] = {
     val ids = centroids.map(_._1).toArray
     graft.functions.VectorMath
@@ -1027,23 +1026,11 @@ object StreamingOps {
       .map { case ((c, d), i) => (ids(c), d, i + 1) }
   }
 
-  /** Localize a codebook DataFrame ((c_label, dim, cv) exploded form,
-    * the `ann_index_persist` artifact) into the broadcastable
-    * driver-side shape the stream closure ships — BOUNDED by
-    * construction: k ≈ √N centroids × dims rows, the same table the
-    * batch path broadcasts. */
-  def localizeCodebook(cent: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Double])] =
-    cent.collect()
-      .groupBy(_.getAs[Long]("c_label"))
-      .map { case (label, rows) =>
-        label -> rows.sortBy(_.getAs[Long]("dim")).map(_.getAs[Double]("cv"))
-      }.toSeq.sortBy(_._1)
-
   /** Streaming incremental ANN ingest — `ann_incremental`'s stream
     * twin, and the reference's live `index.add` loop
     * (app_callapi.py:139-148) as a continuous flow: the codebook is
-    * FROZEN (localized once into the closure, like [[nbScoreStream]]'s
-    * model), and every arriving vector map-side assigns to its
+    * FROZEN (the driver-local codebook rides the closure, like
+    * [[nbScoreStream]]'s model), and every arriving vector map-side assigns to its
     * nAssign nearest cells — STATELESS, no shuffle, no state store;
     * the emitted (vec_id, c_label) rows ARE the index appends, and
     * because assignment is a pure per-vector function of the
@@ -1051,7 +1038,7 @@ object StreamingOps {
     * over the same vectors bit-for-bit (the merged ≡ rebuild identity,
     * here by construction). */
   def ivfAssignStream(vecs: Dataset[StreamVec],
-                      centroids: Seq[(Long, Array[Double])],
+                      centroids: graft.ops.VectorOps.Codebook,
                       nAssign: Int = 1): Dataset[CellAssign] = {
     val spark = vecs.sparkSession
     import spark.implicits._

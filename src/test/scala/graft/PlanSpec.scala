@@ -297,4 +297,36 @@ class PlanSpec extends SparkSpec {
     val p = planOf("kmeans_clusters")
     assert(!p.contains("Window") && !p.contains("collect_list"), p)
   }
+
+  /** The declared queries that train or probe an IVF codebook. */
+  private val codebookQueries = Seq(
+    "ann_ivf", "ann_index_persist", "ann_incremental", "ann_filtered", "ann_recall",
+    "ann_ivf_quantized", "ann_ivf_pq", "ann_pq_index_persist", "ann_recall_ivfpq",
+    "ann_pq_distortion", "ann_codebook_refresh", "index_maintenance_plan",
+    "similarity_join", "semantic_dedup", "semdedup_curve", "hard_negatives",
+    "triplet_mining", "retrieval_training_set", "lof_outliers",
+    "decontaminate_semantic", "kmeans_clusters")
+
+  for (q <- Seq("similarity_join", "ann_codebook_refresh"))
+    test(s"$q: cells are ranked inside each row — no window") {
+      val p = planOf(q)
+      assert(!p.contains("Window"), p)
+    }
+
+  test("IVF queries: no plan densifies a (c_label, dim, cv) codebook") {
+    for (q <- codebookQueries) {
+      val p = planOf(q)
+      assert(!p.contains("collect_list(struct(dim"), s"$q:\n$p")
+    }
+  }
+
+  test("guard: no (dim, cv) densify aggregate under graft/ops") {
+    val root = new java.io.File("src/main/scala/graft/ops")
+    assert(root.isDirectory, s"sources not found under ${root.getAbsolutePath}")
+    val found = root.listFiles().toSeq.filter(_.getName.endsWith(".scala")).filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .contains("""collect_list(struct(col("dim"), col("cv")))""")
+    }.map(_.getName)
+    assert(found.isEmpty, found)
+  }
 }

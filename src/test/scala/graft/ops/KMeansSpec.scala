@@ -8,7 +8,9 @@ import graft.functions.VectorMath._
 import org.apache.spark.graftbridge.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 class KMeansSpec extends SparkSpec {
   import spark.implicits._
@@ -20,24 +22,29 @@ class KMeansSpec extends SparkSpec {
     (3L, Seq(10.0f, 10.1f), 1), (4L, Seq(10.1f, 9.9f), 0), (5L, Seq(9.9f, 10.0f), 1)
   ).toDF("vec_id", "embedding", "label")
 
+  /** Label-mean seeds (c_id = label): with the mixed labels of [[emb]]
+    * both seeds start between the two clusters. */
+  private def labelSeeds(df: DataFrame): DataFrame = VectorOps.meanPoolByLabel(df)
+    .select(col("label").cast("long").as("c_id"), col("dim"), col("centroid_val").as("cv"))
+
+  /** A codebook as its (c_label, dim, cv) rows. */
+  private def exploded(cells: VectorOps.Codebook): DataFrame =
+    cells.flatMap { case (id, v) => v.indices.map(d => (id, d.toLong, v(d))) }
+      .toDF("c_label", "dim", "cv")
+
   test("lloyd iterations converge to the true cluster means") {
-    val cent = VectorOps.kmeansCentroids(emb, iters = 3)
-      .collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq)
-      .toMap
+    val cent = VectorOps.lloyd(emb, 3, labelSeeds(emb))
     // the two refined centroids must be near (0,0) and (10,10),
     // regardless of which c_id landed where
-    val cs = cent.values.toSeq.sortBy(_.head)
+    val cs = cent.map(_._2.toSeq).sortBy(_.head)
     assert(math.abs(cs.head.head) < 1.0 && math.abs(cs.head(1)) < 1.0)
     assert(math.abs(cs(1).head - 10.0) < 1.0 && math.abs(cs(1)(1) - 10.0) < 1.0)
   }
 
   test("refined centroids plug into ivfTopK and improve assignment") {
-    val refined = VectorOps.kmeansCentroids(emb, iters = 3)
-      .select(col("c_id").as("c_label"), col("dim"), col("cv"))
-    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 0), nProbe = 1, k = 2,
-      centroids = Some(refined)).orderBy("rank").collect()
+    val refined = VectorOps.lloyd(emb, 3, labelSeeds(emb))
+    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 0), refined, nProbe = 1, k = 2)
+      .orderBy("rank").collect()
     // with refined cells, probing ONE cell finds the true neighbors
     // (1 and 2), which the mixed label-seeded cells cannot guarantee
     assert(r.map(_.getAs[Long]("vec_id")).toSet === Set(1L, 2L))
@@ -48,30 +55,27 @@ class KMeansSpec extends SparkSpec {
     // in cluster A; Lloyd must still separate: one centroid captures
     // cluster B once any seed is nearest to it — with both seeds in A,
     // iteration keeps both in A, so use k=4 (ids 0-3 span clusters)
-    val cells = VectorOps.kmeansCells(emb, k = 4, iters = 2)
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq).toMap
+    val cells = VectorOps.kmeansCells(emb, k = 4, iters = 2).toMap
     assert(cells.nonEmpty)
     // at least one cell centroid near each true cluster mean
     assert(cells.values.exists(c => math.abs(c.head) < 1.0 && math.abs(c(1)) < 1.0))
     assert(cells.values.exists(c => math.abs(c.head - 10.0) < 1.0 && math.abs(c(1) - 10.0) < 1.0))
     // output shape plugs straight into ivfTopK
-    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 5), nProbe = 1, k = 2,
-      centroids = Some(VectorOps.kmeansCells(emb, 4, 2))).collect()
+    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 5), VectorOps.kmeansCells(emb, 4, 2),
+      nProbe = 1, k = 2).collect()
     assert(r.map(_.getAs[Long]("vec_id")).toSet === Set(3L, 4L))
   }
 
   test("sqrtCells derives k = ceil(sqrt(N)) from the data and is deterministic") {
     // N=6 → k=3: seeds vec_id 0..2 (all cluster A); Lloyd may keep
     // cells in A, but the OUTPUT CONTRACT is what matters — at most
-    // k distinct cells of (c_label, dim, cv), same result every call
-    val c1 = VectorOps.sqrtCells(emb, iters = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val c2 = VectorOps.sqrtCells(emb, iters = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // k cells in ascending c_label, same result every call
+    val c1 = VectorOps.sqrtCells(emb, iters = 2).map { case (id, v) => (id, v.toSeq) }
+    val c2 = VectorOps.sqrtCells(emb, iters = 2).map { case (id, v) => (id, v.toSeq) }
     assert(c1 === c2)
-    assert(c1.map(_._1).size <= 3) // ceil(sqrt(6)) = 3 cells max
-    assert(c1.map(_._2) === Set(0L, 1L)) // both dims present
+    assert(c1.size <= 3) // ceil(sqrt(6)) = 3 cells max
+    assert(c1.map(_._1) === c1.map(_._1).sorted)
+    assert(c1.forall(_._2.length == 2)) // both dims present
   }
 
   test("kmeansClusterStats: counts cover the corpus, inertia is exact micros") {
@@ -130,13 +134,25 @@ class KMeansSpec extends SparkSpec {
   private def refSqrtCells(emb: DataFrame, iters: Int): DataFrame =
     refKmeansCells(emb, math.ceil(math.sqrt(emb.count().toDouble)).toInt, iters)
 
-  private def refKmeansCentroids(emb: DataFrame, iters: Int): DataFrame =
-    refLloyd(emb, iters, VectorOps.meanPoolByLabel(emb)
-      .select(col("label").cast("long").as("c_id"), col("dim"), col("centroid_val").as("cv")))
+  /** The (c_label, dim, cv) interchange form and the rank window that
+    * [[VectorOps.cellRanks]] replaced, kept as the parity reference:
+    * densify the exploded cells, score the N×k cross join, rank each
+    * id's cells by (cdist, c_label), and cut at `n`. */
+  private def refCellRanks(df: DataFrame, cent: DataFrame, idCol: String, n: Int): DataFrame = {
+    val dense = cent.groupBy(col("c_label")).agg(
+      transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
+        s => s.getField("cv")).as("cvec"))
+    df.select(col("vec_id").as(idCol), asDouble(col("embedding")).as("e"))
+      .crossJoin(broadcast(dense))
+      .withColumn("cdist", roundn(fastL2Sq(col("e"), col("cvec")), 6))
+      .withColumn("cell_rank", row_number().over(
+        Window.partitionBy(col(idCol)).orderBy(col("cdist"), col("c_label"))))
+      .filter(col("cell_rank") <= n)
+      .select(col(idCol), col("c_label"), col("cdist"), col("cell_rank"))
+  }
 
   private def refClusterStats(emb: DataFrame, iters: Int): DataFrame =
-    VectorOps.cellRanks(emb, refSqrtCells(emb, iters), "vec_id")
-      .filter(col("cell_rank") === 1)
+    refCellRanks(emb, refSqrtCells(emb, iters), "vec_id", 1)
       .groupBy(col("c_label"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(round(col("cdist") * 1e6).cast("long")).as("inertia6"))
@@ -150,26 +166,31 @@ class KMeansSpec extends SparkSpec {
     Seq(0f, 0f, 0f), Seq(0f, 0f, 0f), Seq(2f, 0f, 0f), Seq(1f, 0f, 0f), Seq(1.0000001f, 0f, 0f))
 
   /** [[tieVecs]], then a null (5) and an empty (6) embedding, both
-    * seeds at k ≥ 7; 7–9 are ragged (2, 4 and 5 dims); then 30 seeded
-    * random vectors of 3 or 4 dims. The rows sit in 3 partitions in a
-    * shuffled order. */
-  private lazy val parityEmb: DataFrame = {
+    * seeds at k ≥ 7; 7–9 are ragged (2, 4 and 5 dims); then `extra`,
+    * then 30 seeded random vectors of 3 or 4 dims. The rows sit in 3
+    * partitions in a shuffled order. */
+  private def fixtureEmb(extra: Seq[Seq[Float]]): DataFrame = {
     val rnd = new scala.util.Random(8080)
     val fixed = tieVecs ++ Seq(null, Seq.empty, Seq(5f, 5f), Seq(5f, 5f, 5f, 5f),
-      Seq(4.9f, 5.1f, 5f, 5.2f, 1f))
+      Seq(4.9f, 5.1f, 5f, 5.2f, 1f)) ++ extra
     val random = Seq.fill(30)(Seq.fill(3 + rnd.nextInt(2))(rnd.nextInt(60) / 10f))
     val rows = (fixed ++ random).zipWithIndex.map { case (e, i) => (i.toLong, e, i % 3) }
     spark.sparkContext.parallelize(rnd.shuffle(rows), 3).toDF("vec_id", "embedding", "label")
   }
 
+  private lazy val parityEmb: DataFrame = fixtureEmb(Nil)
+
   for (iters <- Seq(0, 1, 3)) {
     test(s"map-side Lloyd equals the exploded DataFrame Lloyd row for row (iters $iters)") {
       for (k <- Seq(3, 10))
-        assertSameRows(VectorOps.kmeansCells(parityEmb, k, iters),
+        assertSameRows(exploded(VectorOps.kmeansCells(parityEmb, k, iters)),
           refKmeansCells(parityEmb, k, iters))
-      assertSameRows(VectorOps.sqrtCells(parityEmb, iters), refSqrtCells(parityEmb, iters))
-      assertSameRows(VectorOps.kmeansCentroids(parityEmb, iters),
-        refKmeansCentroids(parityEmb, iters))
+      assertSameRows(exploded(VectorOps.sqrtCells(parityEmb, iters)),
+        refSqrtCells(parityEmb, iters))
+      assertSameRows(
+        exploded(VectorOps.lloyd(parityEmb, iters, labelSeeds(parityEmb)))
+          .withColumnRenamed("c_label", "c_id"),
+        refLloyd(parityEmb, iters, labelSeeds(parityEmb)))
       assertSameRows(VectorOps.kmeansClusterStats(parityEmb, iters),
         refClusterStats(parityEmb, iters))
     }
@@ -182,10 +203,44 @@ class KMeansSpec extends SparkSpec {
     assert(VectorOps.kmeansClusterStats(shifted, 2).isEmpty)
   }
 
+  /** A trained codebook plus hand-made cells: 1000 and 1002 are the same
+    * point, and vectors 3 and 4 are at 1.0 from 1000, 1001 and 1002
+    * after 6dp rounding; 1003 has 2 dims. */
+  private lazy val rankCells: VectorOps.Codebook =
+    VectorOps.kmeansCells(parityEmb, 10, 1) ++ Seq(
+      1000L -> Array(0.0, 0.0, 0.0), 1001L -> Array(2.0, 0.0, 0.0),
+      1002L -> Array(0.0, 0.0, 0.0), 1003L -> Array(5.0, 5.0))
+
+  test("cellRanks equals the densify-and-window form row for row") {
+    // the fixture plus a NaN-holding vector; the random vectors'
+    // one-decimal components tie often after rounding
+    val df = fixtureEmb(Seq(Seq(Float.NaN, 1f, 0f)))
+    val k = rankCells.size
+    for (n <- Seq(1, 2, k, k + 1))
+      assertSameRows(VectorOps.cellRanks(df, rankCells, "vec_id", n),
+        refCellRanks(df, exploded(rankCells), "vec_id", n))
+  }
+
+  test("cellRanks: equal rounded distances go to the lower c_label; no cells, no rows") {
+    val cells = Seq(1000L -> Array(0.0, 0.0, 0.0), 1001L -> Array(2.0, 0.0, 0.0),
+      1002L -> Array(0.0, 0.0, 0.0))
+    val tieEmb = tieVecs.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("vec_id", "embedding")
+    val r = VectorOps.cellRanks(tieEmb, cells, "id", 3)
+    assert(r.schema("cell_rank").dataType === IntegerType)
+    val ranked = r.collect().map(x => (x.getAs[Long]("id"), x.getAs[Int]("cell_rank")) ->
+      (x.getAs[Long]("c_label"), x.getAs[Double]("cdist"))).toMap
+    // vector 3 = (1, 0, 0) is at 1.0 from all three cells, vector 4 too after rounding
+    for (v <- Seq(3L, 4L))
+      assert((1 to 3).map(i => ranked((v, i))) === Seq(1000L -> 1.0, 1001L -> 1.0, 1002L -> 1.0))
+    // vector 0 sits on 1000 and 1002: that tie ranks before the farther 1001
+    assert((1 to 3).map(i => ranked((0L, i))._1) === Seq(1000L, 1002L, 1001L))
+    assert(VectorOps.cellRanks(tieEmb, Seq.empty, "id", 2).isEmpty)
+  }
+
   test("Lloyd rounds: ties go to the lower c_id and a seed without members drops out") {
     val tieEmb = tieVecs.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("vec_id", "embedding")
-    val cells = VectorOps.kmeansCells(tieEmb, 3, 1).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val cells = VectorOps.kmeansCells(tieEmb, 3, 1)
+      .flatMap { case (id, v) => v.indices.map(d => (id, d.toLong) -> v(d)) }.toMap
     assert(!cells.keySet.exists(_._1 == 1L), "seed 1 ties seed 0 and must lose every member")
     // vectors 3 and 4 tie seeds 0 and 2 and join cell 0: its dim-0 mean
     // is (0 + 0 + 1 + 1.0000001) / 4 over its members 0, 1, 3 and 4

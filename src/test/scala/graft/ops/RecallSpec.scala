@@ -26,8 +26,8 @@ class RecallSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
     val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-    val approx = VectorOps.ivfTopK(emb, queries, nProbe = nProbe, k = k,
-        centroids = Some(cent), nAssign = nAssign)
+    val approx = VectorOps.ivfTopK(emb, queries, cent, nProbe = nProbe, k = k,
+        nAssign = nAssign)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val hits = exact.count(approx.contains)
@@ -64,8 +64,8 @@ class RecallSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val (kCells, cent) = VectorOps.sqrtCellsWithK(emb, iters = 2)
     val (nProbe, nAssign) = VectorOps.probePolicy(kCells)
-    val approx = VectorOps.ivfQuantizedTopK(emb, queries, nProbe = nProbe, k = k,
-        centroids = Some(cent), nAssign = nAssign)
+    val approx = VectorOps.ivfQuantizedTopK(emb, queries, cent, nProbe = nProbe, k = k,
+        nAssign = nAssign)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the funnel loses at the union of both pruning stages: the gate

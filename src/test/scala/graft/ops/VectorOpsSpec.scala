@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.functions.VectorMath
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** KNN invariants from SURVEY.md §5.2: result size = min(k, n),
@@ -16,6 +17,15 @@ class VectorOpsSpec extends SparkSpec {
     (2L, Seq(1f, 1f, 0f), 1),
     (3L, Seq(-1f, 0f, 0f), 1)
   ).toDF("vec_id", "embedding", "label")
+
+  /** Per-label mean cells (c_label = label). */
+  private def labelCells(df: DataFrame): VectorOps.Codebook =
+    VectorOps.meanPoolByLabel(df).as[(Int, Long, Double)].collect().toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (label, rows) => label.toLong -> rows.sortBy(_._2).map(_._3).toArray }
+
+  /** One zero cell of `dims` dims: every vector is co-resident. */
+  private def zeroCell(dims: Int): VectorOps.Codebook = Seq(0L -> new Array[Double](dims))
 
   private def query = emb.filter($"vec_id" === 0)
     .select(VectorMath.asDouble($"embedding").as("qe"))
@@ -81,7 +91,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("ivfTopK returns ranked neighbors from probed cells only") {
-    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 0), nProbe = 1, k = 3)
+    val r = VectorOps.ivfTopK(emb, emb.filter($"vec_id" === 0), labelCells(emb), nProbe = 1, k = 3)
       .orderBy("rank").collect()
     assert(r.nonEmpty)
     assert(r.map(_.getAs[Long]("rank")).toSeq === (1L to r.length).toSeq)
@@ -105,14 +115,12 @@ class VectorOpsSpec extends SparkSpec {
     val cent = VectorOps.kmeansCells(base, k = 3, iters = 2)
     val queries = all.filter($"vec_id".isin(0L, 4L, 11L))
 
-    val baseAssigned = VectorOps.cellRanks(base, cent, "vec_id")
-      .filter($"cell_rank" <= 2).select($"vec_id", $"c_label")
+    val baseAssigned = VectorOps.cellRanks(base, cent, "vec_id", 2).select($"vec_id", $"c_label")
     val merged = VectorOps.ivfIncrementalTopK(all, queries,
         baseAssigned = baseAssigned, cent = cent, batch = batch,
         nProbe = 2, k = 3, nAssign = 2)
       .orderBy("query_id", "rank").collect().toSeq
-    val rebuild = VectorOps.ivfTopK(all, queries, nProbe = 2, k = 3,
-        centroids = Some(cent), nAssign = 2)
+    val rebuild = VectorOps.ivfTopK(all, queries, cent, nProbe = 2, k = 3, nAssign = 2)
       .orderBy("query_id", "rank").collect().toSeq
     assert(merged === rebuild)
     assert(merged.nonEmpty)
@@ -143,8 +151,7 @@ class VectorOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
     val cent = VectorOps.kmeansCells(all, k = 3, iters = 2)
     val queries = all.filter($"vec_id" < 3)
-    val r = VectorOps.ivfPqTopK(all, queries, nProbe = 2, k = 3,
-        centroids = Some(cent), rerankFactor = 6)
+    val r = VectorOps.ivfPqTopK(all, queries, cent, nProbe = 2, k = 3, rerankFactor = 6)
       .orderBy("query_id", "rank").collect()
     assert(r.nonEmpty)
     // ranks are contiguous from 1 per query and cosines descend
@@ -167,18 +174,17 @@ class VectorOpsSpec extends SparkSpec {
       v(d) += 1f
       (i, v.toSeq, d)
     }.toDF("vec_id", "embedding", "label")
-    val cent = VectorOps.kmeansCells(all, k = 3, iters = 2).localCheckpoint(true)
+    val cent = VectorOps.kmeansCells(all, k = 3, iters = 2)
     val queries = all.filter($"vec_id" < 3)
-    val fresh = VectorOps.ivfPqTopK(all, queries, nProbe = 2, k = 3,
-        centroids = Some(cent), rerankFactor = 6)
+    val fresh = VectorOps.ivfPqTopK(all, queries, cent, nProbe = 2, k = 3, rerankFactor = 6)
       .orderBy("query_id", "rank").collect().toSeq
     val tmp = java.nio.file.Files.createTempDirectory("graft_pqidx").toString
     val (pqc, codes) = VectorOps.ivfPqIndex(all, cent)
-    cent.write.mode("overwrite").parquet(s"$tmp/cent")
+    VectorOps.codebookFrame(spark, cent).write.mode("overwrite").parquet(s"$tmp/cent")
     pqc.write.mode("overwrite").parquet(s"$tmp/pq")
     codes.write.mode("overwrite").parquet(s"$tmp/codes")
     val reloaded = VectorOps.ivfPqTopKFromIndex(all, queries, nProbe = 2, k = 3,
-        cent = spark.read.parquet(s"$tmp/cent"),
+        cent = VectorOps.collectCodebook(spark.read.parquet(s"$tmp/cent")),
         pqCodebook = spark.read.parquet(s"$tmp/pq"),
         codes = spark.read.parquet(s"$tmp/codes"),
         rerankFactor = 6)
@@ -196,8 +202,7 @@ class VectorOpsSpec extends SparkSpec {
       (4L, Array(0.6f, 0.6f, 0f, 0f), 0), (5L, Array(0f, 0.6f, 0.6f, 0f), 1)
     ).toDF("vec_id", "embedding", "label")
     val cent = VectorOps.kmeansCells(all, k = 2, iters = 2)
-    val r = VectorOps.semdedupCurve(all, thresholds = Seq(0.2, 0.9),
-        centroids = Some(cent)).collect()
+    val r = VectorOps.semdedupCurve(all, cent, thresholds = Seq(0.2, 0.9)).collect()
       .map(x => x.getAs[Long]("threshold_micro") ->
         ((x.getAs[Long]("n_pairs"), x.getAs[Long]("n_pruned"),
           x.getAs[Long]("n_kept"), x.getAs[Long]("kept_micro")))).toMap
@@ -217,7 +222,7 @@ class VectorOpsSpec extends SparkSpec {
       val v = Array.fill(8)(0f); v(d) = 1f
       (i, v.toSeq, d)
     }.toDF("vec_id", "embedding", "label")
-    val cent = VectorOps.kmeansCells(all, k = 3, iters = 2).localCheckpoint(true)
+    val cent = VectorOps.kmeansCells(all, k = 3, iters = 2)
     val (pq, codes) = VectorOps.ivfPqIndex(all, cent)
     val r = VectorOps.ivfPqDistortion(all, cent, pq, codes).head()
     assert(r.getAs[Long]("n_vecs") === 18L)
@@ -234,8 +239,8 @@ class VectorOpsSpec extends SparkSpec {
         ((i * 3) % 7).toFloat / 2f, ((i * 5) % 9).toFloat / 4f).toSeq, 0)
     }.toDF("vec_id", "embedding", "label")
     val cent = VectorOps.kmeansCells(all, k = 2, iters = 2)
-    val r = VectorOps.ivfPqRecallCurve(all, k = 2, factors = Seq(1, 10),
-        nQueries = 3, nProbe = 2, centroids = Some(cent))
+    val r = VectorOps.ivfPqRecallCurve(all, cent, k = 2, factors = Seq(1, 10),
+        nQueries = 3, nProbe = 2)
       .collect()
       .map(x => x.getAs[Long]("param") ->
         ((x.getAs[Long]("n_returned"), x.getAs[Long]("n_hits"),
@@ -274,7 +279,7 @@ class VectorOpsSpec extends SparkSpec {
     // the pre-filter must rank only label-0 vectors
     val q = emb.filter($"vec_id" === 0)
     // probe every cell so IVF is exhaustive → must equal brute force
-    val r = VectorOps.ivfFilteredTopK(emb, $"label" === 0, q, nProbe = 10, k = 3)
+    val r = VectorOps.ivfFilteredTopK(emb, $"label" === 0, q, labelCells(emb), nProbe = 10, k = 3)
       .orderBy("rank").collect()
     val labels = emb.collect().map(x => x.getLong(0) -> x.getInt(2)).toMap
     assert(r.nonEmpty && r.forall(x => labels(x.getAs[Long]("vec_id")) === 0))
@@ -293,8 +298,7 @@ class VectorOpsSpec extends SparkSpec {
     ).toDF("vec_id", "embedding", "label")
     // one zero centroid: every vector lands in the same cell, so the
     // verdict isolates the prune rule from quantizer behavior
-    val cent = (0 until 4).map(d => (0L, d.toLong, 0.0)).toDF("c_label", "dim", "cv")
-    val r = VectorOps.semanticDedupKeep(vecs, threshold = 0.3, centroids = Some(cent))
+    val r = VectorOps.semanticDedupKeep(vecs, zeroCell(4), threshold = 0.3)
       .collect().map(x => x.getLong(0) ->
         (x.getAs[Boolean]("keep"), Option(x.get(1)).map(_.asInstanceOf[Long]))).toMap
     assert(r(0L) === ((true, None)))
@@ -311,8 +315,7 @@ class VectorOpsSpec extends SparkSpec {
     ).toDF("vec_id", "embedding", "label")
     // one zero centroid: all vectors co-resident, so the verdict
     // isolates the mining rule from quantizer recall
-    val cent = (0 until 4).map(d => (0L, d.toLong, 0.0)).toDF("c_label", "dim", "cv")
-    val r = VectorOps.hardNegatives(vecs, centroids = Some(cent))
+    val r = VectorOps.hardNegatives(vecs, zeroCell(4))
       .collect().map(x => x.getAs[Long]("anchor_id") ->
         (x.getAs[Long]("neg_id"), x.getAs[Int]("neg_label"))).toMap
     assert(r.size === 4) // every anchor has some cross-label candidate
@@ -328,8 +331,7 @@ class VectorOpsSpec extends SparkSpec {
     val vecs = (0 until n).map { i =>
       (i.toLong, Seq.tabulate(4)(d => ((i * 7 + d * 3) % 5 - 2).toFloat), i % 3)
     }.toDF("vec_id", "embedding", "label")
-    val cent = (0 until 4).map(d => (0L, d.toLong, 0.0)).toDF("c_label", "dim", "cv")
-    val got = VectorOps.hardNegatives(vecs, centroids = Some(cent))
+    val got = VectorOps.hardNegatives(vecs, zeroCell(4))
       .collect().map(x => x.getAs[Long]("anchor_id") -> x.getAs[Long]("neg_id")).toMap
     // brute force in memory with the same rounded-cosine + id tie-break
     val raw = (0 until n).map(i =>
@@ -359,7 +361,8 @@ class VectorOpsSpec extends SparkSpec {
       case i   => (i, vec(), i % 5)
     }
     val emb = (bench ++ corpus).toDF("vec_id", "embedding", "label")
-    val r = VectorOps.decontaminateSemantic(emb, nBench = 50, tau = 0.9)
+    val r = VectorOps.decontaminateSemantic(emb, VectorOps.sqrtCells(emb, iters = 2),
+        nBench = 50, tau = 0.9)
       .collect().map(x => x.getAs[Long]("corpus_id") ->
         ((x.getAs[Long]("bench_id"), x.getAs[Double]("cos_sim"),
           x.getAs[Boolean]("contaminated")))).toMap
@@ -514,9 +517,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = Seq(0.0, 1.0, 2.0, 3.0, 100.0).zipWithIndex
       .map { case (x, i) => (i.toLong, Array(x.toFloat, 0f), 0L) }
       .toDF("vec_id", "embedding", "label")
-    val cent = Seq((0L, 0L, 0.0), (0L, 1L, 0.0))
-      .toDF("c_label", "dim", "cv")
-    val r = VectorOps.lofOutliers(emb, k = 2, centroids = Some(cent))
+    val r = VectorOps.lofOutliers(emb, zeroCell(2), k = 2)
       .collect()
       .map(x => x.getAs[Long]("vec_id") ->
         ((x.getAs[Long]("rank"), x.getAs[Long]("n_k"),
@@ -581,7 +582,7 @@ class VectorOpsSpec extends SparkSpec {
       (3L, Array(0.5f, 1f), 1),
       (4L, Array(1f, 1f), 2) // alone in its label: no positive exists
     ).toDF("vec_id", "embedding", "label")
-    val r = VectorOps.tripletMining(emb).collect()
+    val r = VectorOps.tripletMining(emb, labelCells(emb)).collect()
       .map(x => x.getAs[Long]("anchor_id") ->
         ((x.getAs[Int]("anchor_label"), x.getAs[Long]("pos_id"),
           x.getAs[Double]("cos_pos"), x.getAs[Long]("neg_id"),

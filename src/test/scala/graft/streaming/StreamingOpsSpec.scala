@@ -811,16 +811,15 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("ivfAssignStream: stream assignments are bit-equal to batch cellRanks; census accumulates") {
     implicit val sqlCtx = spark.sqlContext
-    // a real Lloyd codebook, localized like the production path
-    // (ann_index_persist artifact → closure)
+    // a real Lloyd codebook, passed to the stream as the trainer
+    // returns it
     val emb = (0L until 12L).map { i =>
       val d = (i % 3).toInt
       val v = Array(0.07f * i, 0.05f * ((i * 3) % 5), 0.03f * ((i * 7) % 4))
       v(d) += 1f
       (i, v.toSeq, d)
     }.toDF("vec_id", "embedding", "label")
-    val cent = graft.ops.VectorOps.kmeansCells(emb, k = 3, iters = 2)
-    val codebook = localizeCodebook(cent)
+    val codebook = graft.ops.VectorOps.kmeansCells(emb, k = 3, iters = 2)
     assert(codebook.size === 3 && codebook.forall(_._2.length === 3))
 
     val input = MemoryStream[StreamVec]
@@ -837,8 +836,7 @@ class StreamingOpsSpec extends SparkSpec {
       val got = spark.table("ivf_assign_out").as[CellAssign].collect()
         .map(a => (a.vec_id, a.c_label, a.cdist, a.cell_rank)).sorted.toSeq
       // ground truth: the batch SQL kernel over the same vectors
-      val expect = graft.ops.VectorOps.cellRanks(emb, cent, "vec_id")
-        .filter(col("cell_rank") <= 2).collect()
+      val expect = graft.ops.VectorOps.cellRanks(emb, codebook, "vec_id", 2).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("c_label"),
           r.getAs[Double]("cdist"), r.getAs[Int]("cell_rank"))).sorted.toSeq
       assert(got === expect)
