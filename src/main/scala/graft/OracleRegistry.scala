@@ -84,7 +84,7 @@ private[graft] object OracleRegistry {
        |  FROM psd d JOIN pqa$r a ON a.vec_id = d.vec_id AND a.s = d.s
        |  GROUP BY 1, 2, 3)""".stripMargin
 
-  /** DuckDB twin of VectorOps.ivfPqCandidates: the residual-IVFADC
+  /** DuckDB twin of VectorOps.ivfPqIndex + ivfPqCandidatesFromIndex: the residual-IVFADC
     * CTE chain ending in `adc (query_id, vec_id, qdist)`. Builds on
     * [[duckSqrtCells]] (coarse cells) — primary-cell residuals feed
     * the [[duckPqAssign]]/[[duckPqUpdate]] training unroll via the

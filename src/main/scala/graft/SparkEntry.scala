@@ -318,8 +318,7 @@ object SparkEntry {
       val (nProbe, _) = VectorOps.probePolicy(
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
       val (cent, pq, codes) = pqIndex(s, dir, emb)
-      VectorOps.ivfPqRecallCurve(emb, cent, k = 3, nProbe = nProbe,
-        index = Some((pq, codes)))
+      VectorOps.ivfPqRecallCurve(emb, cent, (pq, codes), k = 3, nProbe = nProbe)
     }),
     // the distortion the trained codebook SHIPS with (Jégou's
     // quantization MSE): per-vector residual reconstruction error
@@ -1464,10 +1463,9 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter(col("vec_id") < 10)
       // ONE brute-force ground truth serves both method curves
-      val exact = VectorOps.annTopK(emb, q, 3)
-        .select(col("query_id"), col("vec_id")).localCheckpoint(false)
-      VectorOps.annRecallCurve(emb, q, k = 3, groundTruth = Some(exact))
-        .unionByName(VectorOps.srpRecallCurve(emb, k = 3, groundTruth = Some(exact)))
+      val exact = VectorOps.groundTruth(emb, q, 3)
+      VectorOps.annRecallCurve(emb, q, exact, k = 3)
+        .unionByName(VectorOps.srpRecallCurve(emb, exact, k = 3))
     }),
 
     // S6/S7 — persistence sink + load (reference app.py:161-168 pickle

@@ -41,10 +41,6 @@ object PortableHash {
   def bucket(s: Column, nBuckets: Int): Column =
     pmod(hash24(s), lit(nBuckets.toLong))
 
-  /** Seeded variant for minhash families: hashes `"<seed>:" || s`. */
-  def seededHash24(s: Column, seed: Int): Column =
-    hash24(concat(lit(s"$seed:"), s))
-
   /** 48-bit non-negative integer from the first 6 bytes (12 hex chars)
     * of sha-256(s). Value range [0, 16^12) — wide enough that simhash
     * band chunks stay selective join keys (12-bit chunks = 4096

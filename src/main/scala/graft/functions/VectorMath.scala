@@ -91,12 +91,6 @@ object VectorMath {
         x => x.getField("p")),
       lit(0.0), (s, x) => s + x)
 
-  /** L2-normalize an Array[Double] column (zero vector stays zero). */
-  def l2Normalize(v: Column): Column = {
-    val n = norm(v)
-    when(n === 0.0, v).otherwise(transform(v, x => x / n))
-  }
-
   // ---- JVM twins of the column kernels (for loops outside Catalyst) ----
 
   /** `roundn(x, 6)` on the JVM: Spark's `round` on a double (HALF_UP on

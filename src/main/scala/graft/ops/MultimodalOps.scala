@@ -283,13 +283,6 @@ object MultimodalOps {
     }
   }
 
-  /** Skinny metadata projection for joins/aggregation — payloads must
-    * never enter a shuffle; join on this instead. */
-  def metadataOf(media: Dataset[MediaRow]): DataFrame =
-    media.toDF().select(col("media_id"), col("modality"), col("width"),
-      col("height"), col("sample_rate"), col("n_frames"),
-      length(col("content")).cast("long").as("n_bytes"))
-
   case class ImageHash(media_id: Long, ahash: Long, ok: Boolean)
 
   /** Deterministic pixel function behind [[syntheticPngs]] — pure in

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -37,12 +37,6 @@ object PersistOps {
       .mode("overwrite")
       .partitionBy(partitionCol)
       .parquet(path)
-
-  /** Read back with a partition-value filter — the plan must show a
-    * PartitionFilters entry and scan only the matching directory. */
-  def readPartition(spark: SparkSession, path: String, partitionCol: String,
-                    value: String): DataFrame =
-    spark.read.parquet(path).filter(col(partitionCol) === value)
 
   /** Morton/z-order curve value for two non-negative quantized
     * coordinates: interleaves the low `bits` bits of `a` (odd

@@ -383,14 +383,48 @@ object VectorOps {
     * LSH/IVF candidate join; this exact kernel then runs per bucket.
     * Queries are broadcast (small side by construction). */
   def annTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = corpusVecs(corpus).crossJoin(broadcast(queryVecs(queries)))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
+    topByCos(scored, k).select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }
+
+  /** The exact top-k (query_id, vec_id) pairs every recall receipt
+    * scores against: [[annTopK]], pinned by a localCheckpoint so one
+    * brute-force pass can serve several receipts. */
+  def groundTruth(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    annTopK(corpus, queries, k).select(col("query_id"), col("vec_id")).localCheckpoint(false)
+
+  /** Float vectors of the corpus side, (vec_id, e). */
+  private def corpusVecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), asDouble(col("embedding")).as("e"))
+
+  /** Float vectors of the query side, (query_id, qe). */
+  private def queryVecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
+
+  /** The exact stage of every ANN funnel: (query_id, vec_id, …)
+    * candidate pairs join their float vectors — the corpus side by
+    * vec_id, the queries broadcast — and gain the rounded cosine
+    * `cos_sim`. Floats are read for candidate rows only. */
+  private def scorePairs(pairs: DataFrame, corpus: DataFrame, queries: DataFrame): DataFrame =
+    pairs.join(corpusVecs(corpus), "vec_id")
+      .join(broadcast(queryVecs(queries)), "query_id")
+      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
+      .drop("e", "qe")
+
+  /** Each query's first `k` rows by (`score` desc, vec_id). */
+  private def topByCos(scored: DataFrame, k: Int, score: String = "cos_sim"): DataFrame =
+    Rank.top(scored, Seq(col("query_id")), Seq(col(score).desc, col("vec_id")), lit(k))
+
+  /** Exact rerank of candidate pairs: [[scorePairs]], then each
+    * query's top `k` ([[topByCos]]), as (query_id, rank, vec_id,
+    * carry…, cos_sim). */
+  private def rerank(pairs: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
+                     carry: String*): DataFrame =
+    topByCos(scorePairs(pairs, corpus, queries), k)
+      .select(Seq(col("query_id"), col("rank"), col("vec_id")) ++ carry.map(col) :+
+        col("cos_sim"): _*)
 
   /** Scalar-quantized ANN — int8 codes for candidate generation,
     * exact floats only for the rerank sliver. The memory-bandwidth
@@ -411,14 +445,17 @@ object VectorOps {
     * ranking — every decision is exact.
     */
   def annQuantizedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                       rerankFactor: Int = 4): DataFrame = {
+                       rerankFactor: Int = 4): DataFrame =
+    exactCosRerank(sq8Candidates(corpus, queries), k * rerankFactor, corpus, queries, k)
+
+  /** The int8 funnel's candidates: every (query, vector) pair but the
+    * self-match, with its integer code distance `qdist`. */
+  private def sq8Candidates(corpus: DataFrame, queries: DataFrame): DataFrame = {
     val scale = symmetricScale(corpus)
-    val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
-    val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val cand = codes.crossJoin(broadcast(qcodes))
+    quantizedCodes(corpus, scale, "vec_id", "qc")
+      .crossJoin(broadcast(quantizedCodes(queries, scale, "query_id", "qq")))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
   /** The full production ANN funnel — IVF × scalar quantization
@@ -435,12 +472,7 @@ object VectorOps {
                        rerankFactor: Int = 4): DataFrame = {
     val assigned = cellRanks(corpus, cells, "vec_id", nAssign)
       .select(col("vec_id"), col("c_label"))
-    val probes = cellRanks(queries, cells, "query_id", nProbe)
-      .select(col("query_id"), col("c_label"))
-    val candidates = probes.join(assigned, "c_label")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-      .distinct()
+    val candidates = ivfCandidates(queries, assigned, cells, nProbe)
 
     val scale = symmetricScale(corpus)
     val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
@@ -491,58 +523,37 @@ object VectorOps {
 
     val csv = subvecs(corpus, "vec_id")
     val cent = pqTrain(csv, subvecs(corpus.filter(col("vec_id") < ksub), "code"), iters)
-    val codes = pqAssign(csv, "vec_id", cent)
-    val codesArr = codes.groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("carr"))
-    // per-query LUT as a MAP keyed by s·ksub + code (m·ksub entries)
-    val lut = subvecs(queries, "query_id")
-      .join(broadcast(cent), "s")
-      .withColumn("pd", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
-      .groupBy(col("query_id"))
-      .agg(map_from_entries(collect_list(
-        struct((col("s") * ksub + col("code")).as("idx"), col("pd")))).as("lut"))
-    val cand = codesArr.crossJoin(broadcast(lut))
+    val cand = codeArrays(pqAssign(csv, "vec_id", cent))
+      .crossJoin(broadcast(adcLut(subvecs(queries, "query_id"), Seq("query_id"), cent, ksub)))
       .filter(col("vec_id") =!= col("query_id"))
-      // ADC: fold the m table lookups in subspace order — map-side,
-      // deterministic (mirrors the oracle's sum(pd ORDER BY s))
-      .withColumn("qdist", roundn(aggregate(
-        sequence(lit(0L), lit(m - 1L)), lit(0.0),
-        (acc, s) => acc + element_at(col("lut"), s * ksub + element_at(col("carr"), (s + 1).cast("int")))), 6))
+      .withColumn("qdist", adcDist(m, ksub))
     exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
+  /** Each vector's m codes as one array `carr` in subspace order, from
+    * [[pqAssign]]'s (vec_id, s, code) rows. */
+  private def codeArrays(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("vec_id"))
+      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
+        x => x.getField("code")).as("carr"))
 
-  /** Shared candidate generator for the residual-IVFADC pair
-    * ([[ivfPqTopK]] / [[ivfPqRecallCurve]]): every (query, vector)
-    * ADC distance over probed cells, NO rank cut — callers apply
-    * their own budget window. Returns (query_id, vec_id, qdist).
-    *
-    * Residual PQ (Jégou et al. TPAMI'11 §IV, the FAISS IVFADC
-    * lineage): [[ivfQuantizedTopK]] composes IVF with a GLOBAL int8
-    * scale; production IVFADC quantizes the RESIDUAL x − c(x) per
-    * PRIMARY cell, which is what keeps code distances accurate as
-    * cells tighten — residual norms shrink with cell radius, so the
-    * same m·ksub codebook budget buys finer resolution where the
-    * data actually lives. Encode assigns each vector ONCE (rn=1 —
-    * the residual is defined against the primary cell; multi-assign
-    * would store conflicting codes per copy), queries probe nProbe
-    * cells and carry a PER-CELL lookup table (q − c_cell residual vs
-    * the shared residual codebooks).
-    *
-    * Scale shape: the coarse codebook broadcasts (√N rows); residuals are
-    * map-side zip_with over the scan; PQ training runs on the
-    * residual subvector stream exactly like [[pqTopK]] (at 100 TB:
-    * train on a sample, encode the full corpus with the broadcast
-    * codebook); the query LUT is nQueries·nProbe·m·ksub rounded
-    * doubles — broadcast; candidate scan is the IVF equi-join with a
-    * map-side m-term fold per row, floats touched only in the rerank.
-    */
-  private def ivfPqCandidates(corpus: DataFrame, queries: DataFrame, cells: Codebook,
-                              nProbe: Int, m: Int, ksub: Int, iters: Int): DataFrame = {
-    val (pqCodebook, codes) = ivfPqIndex(corpus, cells, m, ksub, iters)
-    ivfPqCandidatesFromIndex(queries, nProbe, cells, pqCodebook, codes, m, ksub)
-  }
+  /** A query's ADC lookup table: per `keys` group of (s, sv) subvectors,
+    * a MAP from s·ksub + code to the rounded partial distance `pd` of
+    * subvector s to that code of `book` (m·ksub entries). */
+  private def adcLut(sv: DataFrame, keys: Seq[String], book: DataFrame, ksub: Int): DataFrame =
+    sv.join(broadcast(book), "s")
+      .withColumn("pd", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
+      .groupBy(keys.map(col): _*)
+      .agg(map_from_entries(collect_list(
+        struct((col("s") * ksub + col("code")).as("idx"), col("pd")))).as("lut"))
+
+  /** ADC distance of a row carrying `lut` and `carr`: the m table
+    * lookups folded in subspace order — map-side and deterministic
+    * (the oracle's sum(pd ORDER BY s)), rounded once. */
+  private def adcDist(m: Int, ksub: Int): Column =
+    roundn(aggregate(sequence(lit(0L), lit(m - 1L)), lit(0.0),
+      (acc, s) => acc + element_at(col("lut"),
+        s * ksub + element_at(col("carr"), (s + 1).cast("int")))), 6)
 
   /** The residual-IVFADC INDEX as tables — the TRAIN half (the
     * ann_index_persist convention on the PQ tier: the codebook and
@@ -589,10 +600,7 @@ object VectorOps {
     // the trained codebook heads the encode here and the query LUT in
     // the apply half — m·ksub rows, pin it
     val pqc = pqTrain(csv, seeds, iters).localCheckpoint(false)
-    val codes = pqAssign(csv, "vec_id", pqc)
-      .groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
-        x => x.getField("code")).as("carr"))
+    val codes = codeArrays(pqAssign(csv, "vec_id", pqc))
       .join(assigned, "vec_id")
       .select(col("vec_id"), col("c_label"), col("carr"))
     (pqc, codes)
@@ -669,19 +677,12 @@ object VectorOps {
       .join(broadcast(codebookFrame(queries.sparkSession, cent)), "c_label")
       .select(col("query_id"), col("c_label"),
         zip_with(col("qe"), col("cvec"), (x, c) => x - c).as("r"))
-    val lut = pqSubvecs(qres, Seq("query_id", "c_label"), "r", m, dsub)
-      .join(broadcast(pqCodebook), "s")
-      .withColumn("pd", roundn(fastL2Sq(col("sv"), col("cvec")), 6))
-      .groupBy(col("query_id"), col("c_label"))
-      .agg(map_from_entries(collect_list(
-        struct((col("s") * ksub + col("code")).as("idx"), col("pd")))).as("lut"))
+    val lut = adcLut(pqSubvecs(qres, Seq("query_id", "c_label"), "r", m, dsub),
+      Seq("query_id", "c_label"), pqCodebook, ksub)
     probes.join(codes, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(lut), Seq("query_id", "c_label"))
-      .withColumn("qdist", roundn(aggregate(
-        sequence(lit(0L), lit(m - 1L)), lit(0.0),
-        (acc, s) => acc + element_at(col("lut"),
-          s * ksub + element_at(col("carr"), (s + 1).cast("int")))), 6))
+      .withColumn("qdist", adcDist(m, ksub))
       .select(col("query_id"), col("vec_id"), col("qdist"))
   }
 
@@ -749,61 +750,60 @@ object VectorOps {
     exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
   }
 
-  /** Residual IVFADC top-k — see [[ivfPqCandidates]] for the funnel;
-    * this applies the k·rerankFactor ADC budget and the exact-cosine
-    * rerank ([[exactCosRerank]], floats only on survivors). */
+  /** Residual IVFADC top-k: trains the index ([[ivfPqIndex]]), then
+    * scores its ADC candidates over the probed cells
+    * ([[ivfPqCandidatesFromIndex]]), keeps k·rerankFactor per query and
+    * reranks those by exact cosine ([[exactCosRerank]]).
+    *
+    * Residual PQ (Jégou et al. TPAMI'11 §IV, the FAISS IVFADC
+    * lineage): [[ivfQuantizedTopK]] composes IVF with a GLOBAL int8
+    * scale; production IVFADC quantizes the RESIDUAL x − c(x) per
+    * PRIMARY cell, which is what keeps code distances accurate as
+    * cells tighten — residual norms shrink with cell radius, so the
+    * same m·ksub codebook budget buys finer resolution where the
+    * data actually lives. Encode assigns each vector ONCE (rn=1 —
+    * the residual is defined against the primary cell; multi-assign
+    * would store conflicting codes per copy), queries probe nProbe
+    * cells and carry a PER-CELL lookup table (q − c_cell residual vs
+    * the shared residual codebooks).
+    *
+    * Scale shape: the coarse codebook broadcasts (√N rows); residuals are
+    * map-side zip_with over the scan; PQ training runs on the
+    * residual subvector stream exactly like [[pqTopK]] (at 100 TB:
+    * train on a sample, encode the full corpus with the broadcast
+    * codebook); the query LUT is nQueries·nProbe·m·ksub rounded
+    * doubles — broadcast; candidate scan is the IVF equi-join with a
+    * map-side m-term fold per row, floats touched only in the rerank.
+    */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, cells: Codebook, nProbe: Int, k: Int,
                 m: Int = 8, ksub: Int = 16, iters: Int = 2,
                 rerankFactor: Int = 4): DataFrame = {
-    val cand = ivfPqCandidates(corpus, queries, cells, nProbe, m, ksub, iters)
-    exactCosRerank(cand, k * rerankFactor, corpus, queries, k)
+    val (pqCodebook, codes) = ivfPqIndex(corpus, cells, m, ksub, iters)
+    ivfPqTopKFromIndex(corpus, queries, nProbe, k, cells, pqCodebook, codes, m, ksub,
+      rerankFactor)
   }
 
-  /** The IVFADC leg of the recall-receipt family — rerank budget vs
-    * recall@k against the brute-force ground truth (the
-    * [[sq8RecallCurve]] shape: candidates rank ONCE at the largest
-    * budget, each curve point is a qrank filter + re-rank over the
-    * same checkpointed table; method 'ivfpq', param = factor). */
-  def ivfPqRecallCurve(corpus: DataFrame, cells: Codebook, k: Int = 3,
-                       factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10,
-                       nProbe: Int = 3,
-                       index: Option[(DataFrame, DataFrame)] = None,
-                       groundTruth: Option[DataFrame] = None,
-                       m: Int = 8, ksub: Int = 16): DataFrame = {
+  /** The IVFADC leg of the recall-receipt family: rerank budget vs
+    * recall@k against the brute-force ground truth, over the
+    * residual-IVFADC `index` (codebook, codes) of [[ivfPqIndex]],
+    * which may be the family's persisted artifact: the oracle retrains
+    * it from scratch, so a stale index is a mismatch, never a silent
+    * pass. The ADC candidates rank once at the largest budget, and each
+    * curve point keeps `qrank ≤ k·f` ([[recallReceipt]]; method
+    * 'ivfpq', param = factor). */
+  def ivfPqRecallCurve(corpus: DataFrame, cells: Codebook, index: (DataFrame, DataFrame),
+                       k: Int = 3, factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10,
+                       nProbe: Int = 3, m: Int = 8, ksub: Int = 16): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val maxF = factors.max
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    // the receipt measures the FAMILY's index — consumers may hand in
-    // the shared persisted artifacts (the lang_confusion_learned
-    // amortization; the oracle retrains from scratch, so a stale
-    // artifact is a red row, never a silent pass)
-    // m/ksub describe the SUPPLIED index's shape too — a codebook
-    // trained at a different (m, ksub) must be scored with its own
-    // LUT keys, never the defaults (r14 ADVICE: hardcoded 8/16 here
-    // would silently mis-key a differently-shaped index)
-    val (pqCodebook, codes) = index.getOrElse(
-      ivfPqIndex(corpus, cells, m = m, ksub = ksub, iters = 2))
-    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cells, pqCodebook, codes,
+    val exact = groundTruth(corpus, queries, k)
+    // m/ksub describe the supplied index's shape: a codebook trained at
+    // another (m, ksub) must be scored with its own LUT keys
+    val cand = ivfPqCandidatesFromIndex(queries, nProbe, cells, index._1, index._2,
       m = m, ksub = ksub)
-    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
-        lit(k * maxF), "qrank")
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
-      .localCheckpoint(false)
-    val curve = factors.map { f =>
-      Rank.top(scored.filter(col("qrank") <= k * f), Seq(col("query_id")),
-          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("ivfpq"))
-        .withColumn("param", lit(f.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    val pairs = budgetCut(cand, k * factors.max)
+      .select(col("query_id"), col("vec_id"), col("qrank"))
+    recallReceipt("ivfpq", exact, scorePairs(pairs, corpus, queries), k,
+      factors.map(f => (f, col("qrank") <= k * f, "cos_sim")))
   }
 
   /** Build-time quantization scale: one scalar (max |component|) over
@@ -834,18 +834,14 @@ object VectorOps {
     * for those rows — a k·rerankFactor-per-query equi-join, never a
     * second flat scan. `cand` carries (query_id, vec_id, qdist), uncut. */
   private def exactCosRerank(cand: DataFrame, budget: Int, corpus: DataFrame,
-                             queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
-        lit(budget), "qrank")
-      .select(col("query_id"), col("vec_id"), col("qdist"))
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("qdist"), col("cos_sim"))
-  }
+                             queries: DataFrame, k: Int): DataFrame =
+    rerank(budgetCut(cand, budget).select(col("query_id"), col("vec_id"), col("qdist")),
+      corpus, queries, k, "qdist")
+
+  /** Each query's first `budget` candidates by (qdist, vec_id); a
+    * row's `qrank` is the smallest budget that admits it. */
+  private def budgetCut(cand: DataFrame, budget: Int): DataFrame =
+    Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")), lit(budget), "qrank")
 
   /** Per-vector stats via ARRAY higher-order folds (`aggregate` /
     * `array_min`/`array_max`) — the brief's array-op surface for
@@ -1203,25 +1199,20 @@ object VectorOps {
     * cell equi-join for candidates (never all-pairs), broadcast
     * 1-row-per-query build side, rank window per query. */
   def ivfTopKFromIndex(corpus: DataFrame, queries: DataFrame, assigned: DataFrame,
-                       cent: Codebook, nProbe: Int, k: Int): DataFrame = {
-    val probes = cellRanks(queries, cent, "query_id", nProbe)
-      .select(col("query_id"), col("c_label"))
+                       cent: Codebook, nProbe: Int, k: Int): DataFrame =
+    rerank(ivfCandidates(queries, assigned, cent, nProbe), corpus, queries, k)
 
-    val candidates = probes
+  /** IVF candidate pairs (query_id, vec_id): each query probes its
+    * `nProbe` nearest cells of `cent` and meets every vector `assigned`
+    * (vec_id, c_label) to one of them, self-match excluded. Distinct,
+    * since a pair can meet in several cells. */
+  private def ivfCandidates(queries: DataFrame, assigned: DataFrame, cent: Codebook,
+                            nProbe: Int): DataFrame =
+    cellRanks(queries, cent, "query_id", nProbe).select(col("query_id"), col("c_label"))
       .join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
-      .distinct() // a (query, vec) pair can meet in several cells
-
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = candidates
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
-  }
+      .distinct()
 
   /** Incremental ANN ingest — the reference's defining maintenance
     * loop (app_callapi.py:139-148: unchanged files skipped, new
@@ -1285,14 +1276,14 @@ object VectorOps {
     * oracle-pinned query (the way `bpe_vocab_size` pins training
     * depth): for each probe budget, recall@k of [[ivfTopK]] over the
     * √N Lloyd codebook (nAssign = 1 so the curve isolates the probe
-    * axis) against the exact [[annTopK]] ground truth. Both sides are
+    * axis) against `exact`, the pinned [[groundTruth]] the caller can
+    * share with [[srpRecallCurve]]. Both sides are
     * recomputed exactly by the DuckDB twin — the receipt is not a
     * stored number but a replayable measurement, so a quantizer or
     * probe-policy regression shows up as a hash mismatch.
     *
-    * Output: (method, param, n_returned, n_hits, n_exact, recall) —
-    * one row per budget. n_returned can undershoot k·|queries| at
-    * small budgets (a 1-probe query may see < k candidates); that
+    * Output: [[recallReceipt]]'s, one row per budget. n_returned can
+    * undershoot k·|queries| at small budgets (a 1-probe query may see < k candidates); that
     * undershoot is part of what the curve documents.
     *
     * Scale shape: the exact side is the one cross join (queries
@@ -1304,47 +1295,43 @@ object VectorOps {
     * for that query is the SMALLEST budget that reaches the pair
     * (`first_probe`) — so the corpus assignment, the query probe
     * ranks, and every pairwise cosine are evaluated a single time
-    * and each curve point is a `first_probe <= p` filter + re-rank
-    * over the same checkpointed scored table (measured 6.3 → ~2 s at
+    * and each curve point keeps `first_probe <= p` of the same pinned
+    * scored table ([[recallReceipt]]; measured 6.3 → ~2 s at
     * sf0.1 vs the ivfTopK-per-point form; output identical, which
     * the unchanged oracle pins). */
-  def annRecallCurve(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-                     nProbes: Seq[Int] = Seq(1, 2, 3),
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
+  def annRecallCurve(corpus: DataFrame, queries: DataFrame, exact: DataFrame, k: Int = 3,
+                     nProbes: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
     val cent = sqrtCells(corpus, iters = 2)
     val assigned = cellRanks(corpus, cent, "vec_id", 1)
       .select(col("vec_id"), col("c_label"))
-    val probes = cellRanks(queries, cent, "query_id", nProbes.max)
+    val pairs = cellRanks(queries, cent, "query_id", nProbes.max)
       .select(col("query_id"), col("c_label"), col("cell_rank"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = probes.join(assigned, "c_label")
+      .join(assigned, "c_label")
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("cell_rank")).as("first_probe"))
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("first_probe"), col("cos_sim"))
-      .localCheckpoint(false)
-    val curve = nProbes.map { p =>
-      Rank.top(scored.filter(col("first_probe") <= p), Seq(col("query_id")),
-          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("ivf"))
-        .withColumn("param", lit(p.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallReceipt("ivf", exact, scorePairs(pairs, corpus, queries), k,
+      nProbes.map(p => (p, col("first_probe") <= p, "cos_sim")))
   }
 
-  /** Shared receipt tail: hit-join a (method, param, query_id,
-    * vec_id) curve against the exact ground truth and collapse to
-    * one recall row per (method, param). */
-  private def recallAgg(curve: DataFrame, exact: DataFrame, nExact: DataFrame): DataFrame =
-    curve
+  /** The recall receipt every ANN method shares. `scored` holds
+    * (query_id, vec_id), the score columns and whatever the points
+    * filter on; it is computed once and pinned. Each point
+    * `(param, keep, score)` keeps the rows `keep` admits, cuts each
+    * query to its top `k` by `score` ([[topByCos]]) and is tagged
+    * (`method`, param). Each (method, param) then counts its hits
+    * against the pinned [[groundTruth]] pairs `exact`.
+    * Output: (method, param, n_returned, n_hits, n_exact, recall). */
+  private def recallReceipt(method: String, exact: DataFrame, scored: DataFrame, k: Int,
+                            points: Seq[(Int, Column, String)]): DataFrame = {
+    val nExact = exact.agg(count(lit(1)).as("n_exact"))
+    val pinned = scored.localCheckpoint(false)
+    points.map { case (param, keep, score) =>
+      topByCos(pinned.filter(keep), k, score)
+        .select(col("query_id"), col("vec_id"))
+        .withColumn("method", lit(method))
+        .withColumn("param", lit(param.toLong))
+    }.reduce(_ unionByName _)
       .join(exact.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
       .groupBy(col("method"), col("param"))
       .agg(count(lit(1)).as("n_returned"),
@@ -1353,54 +1340,27 @@ object VectorOps {
       .withColumn("recall", roundn(col("n_hits") / col("n_exact").cast("double"), 6))
       .select(col("method"), col("param"), col("n_returned"), col("n_hits"),
         col("n_exact"), col("recall"))
+  }
 
   /** SRP leg of the recall receipt — recall-vs-bands for [[srpTopK]]'s
-    * hyperplane-bit index, same schema as [[annRecallCurve]] (method
-    * 'srp', param = band budget). Mirrors the first_probe trick: a
-    * candidate pair's FIRST matching band index is the smallest band
-    * budget that reaches it, so signatures, the bucket join, and every
-    * candidate cosine are computed once and each curve point is a
-    * `first_band < b` filter + re-rank over the same checkpointed
-    * table. */
-  def srpRecallCurve(corpus: DataFrame, k: Int = 3,
+    * hyperplane-bit index (method 'srp', param = band budget). A
+    * candidate pair's first matching band is the smallest band budget
+    * that reaches it, so the signatures, the bucket join and every
+    * candidate cosine are computed once, and each curve point keeps
+    * `first_band < b` ([[recallReceipt]]). */
+  def srpRecallCurve(corpus: DataFrame, exact: DataFrame, k: Int = 3,
                      bands: Seq[Int] = Seq(2, 4, 8), outDim: Int = 32,
-                     bandBits: Int = 4, nQueries: Int = 10,
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
-    val queries = corpus.filter(col("vec_id") < nQueries)
-    // ann_recall computes both method curves against ONE ground
-    // truth — the brute-force side is the receipt's dominant cost,
-    // so the ivf leg's checkpointed exact table is reused here
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val sig = randomProject(corpus, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-    val qsig = sig.filter(col("vec_id") < nQueries)
+                     bandBits: Int = 4, nQueries: Int = 10): DataFrame = {
+    val sig = bandSigs(srpBits(corpus, outDim, bandBits), bandBits)
+    val pairs = sig.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val pairs = qsig.join(sig, Seq("band", "band_sig"))
+      .join(sig, Seq("band", "band_sig"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(min(col("band")).as("first_band"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = pairs
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("first_band"), col("cos_sim"))
-      .localCheckpoint(false)
-    val curve = bands.map { b =>
-      Rank.top(scored.filter(col("first_band") < b), Seq(col("query_id")),
-          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("srp"))
-        .withColumn("param", lit(b.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallReceipt("srp", exact,
+      scorePairs(pairs, corpus, corpus.filter(col("vec_id") < nQueries)), k,
+      bands.map(b => (b, col("first_band") < b, "cos_sim")))
   }
 
   /** Scalar-quantization recall receipt — the BYTES axis of the
@@ -1413,44 +1373,18 @@ object VectorOps {
     *
     * The candidate ranking, the code distances, and every exact
     * rerank cosine are computed ONCE at the LARGEST budget (a
-    * candidate's integer qrank is the smallest budget that admits it
-    * — the first_probe economy on the rerank axis); each curve point
-    * is a `qrank ≤ k·f` filter + re-rank over the same checkpointed
-    * table. Integer code distances tie-break on vec_id, the rerank on
+    * candidate's integer qrank is the smallest budget that admits it);
+    * each curve point keeps `qrank ≤ k·f` ([[recallReceipt]]). Integer code distances tie-break on vec_id, the rerank on
     * (rounded cos desc, vec_id) — [[annQuantizedTopK]]'s exact
     * decision path. */
   def sq8RecallCurve(corpus: DataFrame, k: Int = 3,
-                     factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10,
-                     groundTruth: Option[DataFrame] = None): DataFrame = {
+                     factors: Seq[Int] = Seq(1, 2, 4), nQueries: Int = 10): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = groundTruth.getOrElse(annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val maxF = factors.max
-    val scale = symmetricScale(corpus)
-    val codes = quantizedCodes(corpus, scale, "vec_id", "qc")
-    val qcodes = quantizedCodes(queries, scale, "query_id", "qq")
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val cand = codes.crossJoin(broadcast(qcodes))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("qdist", intL2Sq(col("qc"), col("qq")))
-    val scored = Rank.top(cand, Seq(col("query_id")), Seq(col("qdist"), col("vec_id")),
-        lit(k * maxF), "qrank")
+    val exact = groundTruth(corpus, queries, k)
+    val pairs = budgetCut(sq8Candidates(corpus, queries), k * factors.max)
       .select(col("query_id"), col("vec_id"), col("qrank"))
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-      .select(col("query_id"), col("vec_id"), col("qrank"), col("cos_sim"))
-      .localCheckpoint(false)
-    val curve = factors.map { f =>
-      Rank.top(scored.filter(col("qrank") <= k * f), Seq(col("query_id")),
-          Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("sq8"))
-        .withColumn("param", lit(f.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallReceipt("sq8", exact, scorePairs(pairs, corpus, queries), k,
+      factors.map(f => (f, col("qrank") <= k * f, "cos_sim")))
   }
 
   /** Matryoshka truncation receipt — the dimension axis of the
@@ -1465,8 +1399,8 @@ object VectorOps {
     * All prefix scores come from ONE pass: the candidate cross join
     * (queries broadcast — the [[annTopK]] receipt shape) computes
     * every prefix cosine per pair via `slice`, and each curve point
-    * is a rank window over the same checkpointed scored table (the
-    * [[annRecallCurve]] first_probe economy applied to dims).
+    * ranks the same pinned table by its own prefix cosine
+    * ([[recallReceipt]]).
     * Tie-break (rounded cos desc, vec_id) matches the ground truth's.
     *
     * Scale shape: the receipt is exact-vs-exact by construction (its
@@ -1478,24 +1412,13 @@ object VectorOps {
                        dims: Seq[Int] = Seq(8, 16, 32),
                        nQueries: Int = 10): DataFrame = {
     val queries = corpus.filter(col("vec_id") < nQueries)
-    val exact = annTopK(corpus, queries, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint(false)
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = c.crossJoin(broadcast(q))
+    val exact = groundTruth(corpus, queries, k)
+    val scored = corpusVecs(corpus).crossJoin(broadcast(queryVecs(queries)))
       .filter(col("vec_id") =!= col("query_id"))
       .select(Seq(col("query_id"), col("vec_id")) ++ dims.map(d =>
         roundn(fastCosine(slice(col("e"), 1, d), slice(col("qe"), 1, d)), 6)
           .as(s"cos_$d")): _*)
-      .localCheckpoint(false)
-    val curve = dims.map { d =>
-      Rank.top(scored, Seq(col("query_id")), Seq(col(s"cos_$d").desc, col("vec_id")), lit(k))
-        .select(col("query_id"), col("vec_id"))
-        .withColumn("method", lit("trunc"))
-        .withColumn("param", lit(d.toLong))
-    }.reduce(_ unionByName _)
-    recallAgg(curve, exact, nExact)
+    recallReceipt("trunc", exact, scored, k, dims.map(d => (d, lit(true), s"cos_$d")))
   }
 
   /** Embedding-space outlier screen — the mislabeled-data detector a
@@ -1585,32 +1508,9 @@ object VectorOps {
     * top-k is a window over candidates. The probability knob is
     * bands×bits: more bands → recall, longer bands → precision. */
   def srpTopK(embeddings: DataFrame, k: Int = 3, nQueries: Int = 10,
-              outDim: Int = 32, bandBits: Int = 4): DataFrame = {
-    val sig = randomProject(embeddings, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-      // sig feeds BOTH the query side and the corpus side of the
-      // candidate join — without this the 32-fold literal-matrix
-      // projection re-evaluates over the full corpus per use
-      .localCheckpoint(false)
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val cand = q.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = cand
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
-  }
+              outDim: Int = 32, bandBits: Int = 4): DataFrame =
+    rerank(srpCandidates(embeddings, multiProbe = false, nQueries, outDim, bandBits),
+      embeddings, embeddings.filter(col("vec_id") < nQueries), k)
 
   /** Multi-probe SRP-LSH (Lv et al., VLDB'07 applied to the Charikar
     * signature): [[srpTopK]] probes only each query's HOME bucket per
@@ -1627,60 +1527,27 @@ object VectorOps {
     * bandBits rows) — the probe union doubles only the QUERY side of
     * the candidate equi-join, never the corpus signatures. */
   def srpMultiProbeTopK(embeddings: DataFrame, k: Int = 3, nQueries: Int = 10,
-                        outDim: Int = 32, bandBits: Int = 4): DataFrame = {
-    // proj feeds sig AND the flip table; sig feeds the home probes
-    // AND the corpus side of the candidate join — checkpoint both so
-    // the corpus-wide projection evaluates exactly once
-    val proj = randomProject(embeddings, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .localCheckpoint(false)
-    val sig = proj
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-      .localCheckpoint(false)
-    val flip = Rank.top(proj.filter(col("vec_id") < nQueries), Seq(col("vec_id"), col("band")),
-        Seq(abs(col("proj")), col("out_dim")), lit(1))
-      .select(col("vec_id"), col("band"),
-        (col("out_dim") % bandBits).as("flip_pos"))
-    val home = sig.filter(col("vec_id") < nQueries)
-    val probes = home
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-      .unionByName(home.join(flip, Seq("vec_id", "band"))
-        .select(col("vec_id").as("query_id"), col("band"),
-          expr("band_sig ^ shiftleft(1L, cast(flip_pos as int))").as("band_sig")))
-    val cand = probes.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val c = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    val qe = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val scored = cand
-      .join(c, "vec_id")
-      .join(broadcast(qe), "query_id")
-      .withColumn("cos_sim", roundn(fastCosine(col("e"), col("qe")), 6))
-    Rank.top(scored, Seq(col("query_id")), Seq(col("cos_sim").desc, col("vec_id")), lit(k))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
-  }
+                        outDim: Int = 32, bandBits: Int = 4): DataFrame =
+    rerank(srpCandidates(embeddings, multiProbe = true, nQueries, outDim, bandBits),
+      embeddings, embeddings.filter(col("vec_id") < nQueries), k)
 
-  /** The candidate sets of the single- and multi-probe SRP tiers for
-    * the same queries — the superset receipt [[srpMultiProbeTopK]]'s
-    * spec pins (exposed for tests; not a declared query). */
+  /** The SRP-LSH candidate generator of [[srpTopK]] (single probe) and
+    * [[srpMultiProbeTopK]] (`multiProbe`): each of the first `nQueries`
+    * vectors probes its home bucket in every band — and, multi-probe,
+    * also the bucket with that band's lowest-margin bit flipped — and
+    * meets every vector sharing a probed bucket. Output (query_id,
+    * vec_id), distinct, self-match excluded.
+    *
+    * `sig` feeds the probes and the corpus side of the join, and under
+    * multi-probe the banded projection feeds the flip table too: each
+    * is pinned where two consumers read it, so the corpus-wide
+    * projection evaluates once. */
   private[graft] def srpCandidates(embeddings: DataFrame, multiProbe: Boolean,
                                    nQueries: Int = 10, outDim: Int = 32,
                                    bandBits: Int = 4): DataFrame = {
-    // same lineage hygiene as the declared tiers: the projection is
-    // corpus-wide, so pin it (and sig) before the multi-use fan-out
-    val proj = randomProject(embeddings, outDim)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
-      .localCheckpoint(false)
-    val sig = proj
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
-        .as("band_sig"))
-      .localCheckpoint(false)
+    val bits = srpBits(embeddings, outDim, bandBits)
+    val proj = if (multiProbe) bits.localCheckpoint(false) else bits
+    val sig = bandSigs(proj, bandBits).localCheckpoint(false)
     val home = sig.filter(col("vec_id") < nQueries)
     val base = home.select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
     val probes = if (!multiProbe) base else {
@@ -1696,6 +1563,20 @@ object VectorOps {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id")).distinct()
   }
+
+  /** The [[randomProject]] coordinates as sign bits, `bandBits` to a
+    * band: (vec_id, out_dim, proj, bit, band). */
+  private def srpBits(embeddings: DataFrame, outDim: Int, bandBits: Int): DataFrame =
+    randomProject(embeddings, outDim)
+      .withColumn("bit", (col("proj") > 0).cast("long"))
+      .withColumn("band", floor(col("out_dim") / bandBits).cast("long"))
+
+  /** Each vector's band signatures (vec_id, band, band_sig): a band's
+    * sign bits read as one integer, bit i of the band at 2^i. */
+  private def bandSigs(bits: DataFrame, bandBits: Int): DataFrame =
+    bits.groupBy(col("vec_id"), col("band"))
+      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % bandBits)).cast("long")
+        .as("band_sig"))
 
   /** EMBEDDING DRIFT monitor — the vector member of the drift family
     * (valueDrift distributions, mixDrift composition, this one

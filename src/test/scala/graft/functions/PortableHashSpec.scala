@@ -83,14 +83,9 @@ class PortableHashSpec extends SparkSpec {
     }
   }
 
-  test("bucket stays within range and seeded hashes differ by seed") {
-    val df = Seq("x").toDF("s").select(
-      PortableHash.bucket(col("s"), 64).as("b"),
-      PortableHash.seededHash24(col("s"), 0).as("h0"),
-      PortableHash.seededHash24(col("s"), 1).as("h1"))
-    val r = df.head()
-    assert(r.getLong(0) >= 0 && r.getLong(0) < 64)
-    assert(r.getLong(1) !== r.getLong(2))
+  test("bucket stays within range") {
+    val b = Seq("x").toDF("s").select(PortableHash.bucket(col("s"), 64)).head().getLong(0)
+    assert(b >= 0 && b < 64)
   }
 
   // codegen fallback off: a generated class that fails to compile

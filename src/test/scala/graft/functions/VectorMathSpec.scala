@@ -33,11 +33,4 @@ class VectorMathSpec extends SparkSpec {
   test("roundn normalizes -0.0") {
     assert(one(roundn(lit(-0.0000001), 4)).compareTo(0.0) == 0)
   }
-
-  test("l2Normalize produces unit vectors; zero stays zero") {
-    val n = Seq(1).toDF("x").select(norm(l2Normalize(a)).as("v")).head().getDouble(0)
-    assert(math.abs(n - 1.0) < 1e-12)
-    val z = Seq(1).toDF("x").select(norm(l2Normalize(zero)).as("v")).head().getDouble(0)
-    assert(z === 0.0)
-  }
 }

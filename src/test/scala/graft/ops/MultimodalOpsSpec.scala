@@ -116,12 +116,6 @@ class MultimodalOpsSpec extends SparkSpec {
     assert(!byId.contains(2L))
   }
 
-  test("metadataOf is payload-free and carries measured sizes") {
-    val m = metadataOf(media)
-    assert(!m.columns.contains("content"))
-    assert(m.filter($"media_id" === 0).head().getAs[Long]("n_bytes") === 256L)
-  }
-
   test("syntheticMedia round-trips documents into typed media rows") {
     val docs = Seq((0L, "hello world", "en", "s0", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

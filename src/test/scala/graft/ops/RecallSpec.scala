@@ -93,17 +93,9 @@ class RecallSpec extends SparkSpec {
     // Charikar S-curve, not a bug.
     val hits = exact.count(approx.contains)
     assert(hits >= 16, s"SRP recall@3 $hits/${exact.size}")
-    // pruning is real: candidate pairs stay well under the 10·N scan
-    val sig = VectorOps.randomProject(emb, 32)
-      .withColumn("bit", (col("proj") > 0).cast("long"))
-      .withColumn("band", floor(col("out_dim") / 4).cast("long"))
-      .groupBy(col("vec_id"), col("band"))
-      .agg(sum(col("bit") * pow(lit(2.0), col("out_dim") % 4)).cast("long").as("band_sig"))
-    val q = sig.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("band"), col("band_sig"))
-    val nCand = q.join(sig, Seq("band", "band_sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id").distinct().count()
+    // pruning is real: the candidate pairs srpTopK reranks stay well
+    // under the 10·N scan
+    val nCand = VectorOps.srpCandidates(emb, multiProbe = false).count()
     val n = emb.count()
     assert(nCand < 10 * n / 2, s"SRP candidates $nCand should prune the ${10 * n} scan")
   }

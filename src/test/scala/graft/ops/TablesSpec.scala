@@ -174,7 +174,7 @@ class TablesSpec extends SparkSpec {
   test("src/main opens parquet through Tables.parquet except at partitioned sites") {
     // spark.read.parquet infers the schema with a Spark job; only the
     // partitioned layouts (partition discovery) may still use it
-    val allowed = Map("PersistOps.scala" -> 2, "DocCorpusSource.scala" -> 1)
+    val allowed = Map("PersistOps.scala" -> 1, "DocCorpusSource.scala" -> 1)
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"sources not found under ${root.getAbsolutePath}")
     def files(f: File): Seq[File] =

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.io.File
+import java.nio.file.Files
 import graft.SparkSpec
 import graft.functions.VectorMath
 import org.apache.spark.sql.DataFrame
@@ -239,8 +241,8 @@ class VectorOpsSpec extends SparkSpec {
         ((i * 3) % 7).toFloat / 2f, ((i * 5) % 9).toFloat / 4f).toSeq, 0)
     }.toDF("vec_id", "embedding", "label")
     val cent = VectorOps.kmeansCells(all, k = 2, iters = 2)
-    val r = VectorOps.ivfPqRecallCurve(all, cent, k = 2, factors = Seq(1, 10),
-        nQueries = 3, nProbe = 2)
+    val r = VectorOps.ivfPqRecallCurve(all, cent, VectorOps.ivfPqIndex(all, cent), k = 2,
+        factors = Seq(1, 10), nQueries = 3, nProbe = 2)
       .collect()
       .map(x => x.getAs[Long]("param") ->
         ((x.getAs[Long]("n_returned"), x.getAs[Long]("n_hits"),
@@ -622,5 +624,22 @@ class VectorOpsSpec extends SparkSpec {
     // 4 queries x top-2 = 8 total occurrences
     assert(r.map { case (occ, n) => occ * n }.sum === 8L)
     assert(r.get(0L).contains(1L), "the anti-aligned vector is retrieved by nobody")
+  }
+
+  test("guard: one recall-receipt tagging and one SRP band-signature aggregate under graft/ops") {
+    // a curve point tagged with its (method, param) belongs in
+    // VectorOps.recallReceipt, and the SRP band_sig sum of sign bits
+    // in VectorOps.bandSigs
+    val root = new File("src/main/scala/graft/ops")
+    assert(root.isDirectory, s"sources not found under ${root.getAbsolutePath}")
+    val sources = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName -> new String(Files.readAllBytes(f.toPath), "UTF-8"))
+    def copies(pattern: String): Map[String, Int] = sources
+      .map { case (name, text) => name -> pattern.r.findAllIn(text).size }
+      .filter(_._2 > 0).toMap
+    assert(copies("""withColumn\(\s*"param"|\.as\(\s*"param"\s*\)""") ===
+      Map("VectorOps.scala" -> 1))
+    assert(copies("""pow\(\s*lit\(2\.0\)\s*,\s*col\("out_dim"\)""") ===
+      Map("VectorOps.scala" -> 1))
   }
 }
